@@ -62,6 +62,17 @@ private[graft] object Checkpoints {
     out
   }
 
+  /** True iff `df`'s analyzed plan (subqueries included) reads a
+    * checkpoint minted by [[scratch]] and not yet swept — i.e. `df` dies
+    * at the next query boundary. [[graft.queries.SharedFrames.sharedFrame]]
+    * refuses such a frame at build time: a registry entry outlives the
+    * query, and after [[sweepScratch]] its recompute would read freed
+    * blocks ("Checkpoint block not found"). */
+  def scratchRooted(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case lr: LogicalRDD if scratchIds.contains(lr.rdd.id) => lr
+    }.nonEmpty
+
   /** [[scratch]] plus a row count matching `pred`, read from the SAME
     * materialization job via `Dataset.observe` (CollectMetricsExec — a
     * codegen-neutral accumulator node): the iterative kernels' per-round

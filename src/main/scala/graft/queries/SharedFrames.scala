@@ -28,14 +28,29 @@ object SharedFrames {
   }
 
   /** Generic gate for a shared corpus-derived frame: `table` names the
-    * fingerprinted source, `kind` the derivation. */
+    * fingerprinted source, `kind` the derivation.
+    *
+    * A shared frame must be recomputable from its lineage: the registry
+    * keeps it across queries, and the between-query sweep
+    * ([[graft.operators.Checkpoints.sweepScratch]]) frees every
+    * [[graft.operators.Checkpoints.scratch]] block. A newly built frame
+    * rooted in such a block is therefore refused with an
+    * IllegalStateException naming `kind`; the check runs only on a build,
+    * so registry hits pay nothing. `build` must not call the registry
+    * itself (see [[graft.ann.Models.cachedLatest]]'s CONTRACT): resolve
+    * input shared frames before the call. */
   def sharedFrame(spark: SparkSession, dir: String, table: String,
       kind: String)(build: => DataFrame): DataFrame =
     repersisted(graft.ann.Models.cachedLatest[DataFrame](
       s"frame:$kind:${graft.ann.Models.sessionId(spark)}:$dir",
       graft.ann.Models.corpusStamp(spark, dir, table),
       onEvict = _.unpersist(blocking = false)) {
-      build
+      val df = build
+      if (graft.operators.Checkpoints.scratchRooted(df))
+        throw new IllegalStateException(s"shared frame '$kind' is rooted " +
+          "in a Checkpoints.scratch block, which the between-query sweep " +
+          "frees; build it from recomputable lineage instead")
+      df
     })
 
   /** The market-basket frame: one row per distinct (order, part) incidence.

@@ -406,6 +406,26 @@ class PropertySpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  test("SharedFrames refuses a frame rooted in a scratch checkpoint") {
+    val sf = "/root/testdata/sf0.001"
+    val kind = "scratch-rooted-probe"
+    val scratch = graft.operators.Checkpoints.scratch(spark.range(10).toDF("v"))
+    val err = intercept[IllegalStateException] {
+      graft.queries.SharedFrames.sharedFrame(spark, sf, "lineitem", kind) {
+        scratch.select((col("v") * 2).as("v"))
+      }
+    }
+    assert(err.getMessage.contains(kind), err.getMessage)
+    // the refused build leaves no entry behind: a recomputable frame under
+    // the same kind registers normally
+    val ok = graft.queries.SharedFrames.sharedFrame(spark, sf, "lineitem", kind) {
+      spark.range(10).toDF("v")
+    }
+    assert(ok.count() == 10L)
+    ok.unpersist()
+    graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
+  }
+
   test("assortativityMoments agrees with driver-side degree sums on random graphs") {
     val params = SCTest.Parameters.default.withMinSuccessfulTests(5)
     val res = SCTest.check(params, Prop.forAll(undirGraphGen) { edges =>

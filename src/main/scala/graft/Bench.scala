@@ -87,25 +87,7 @@ object Bench {
                        // exposes host noise without a judge-side probe
       }
       if (t.isEmpty) failed += name
-      // Operators may cache intermediates (e.g. LSH signature/candidate
-      // stages); release them so cached stages never accumulate across the
-      // full run and each query is timed against a clean block store.
-      spark.catalog.clearCache()
-      // clearCache() only drops SQL-cached plans; RDD-level persists
-      // (eager localCheckpoints — e.g. a CC result snapshot) live in
-      // sc.getPersistentRDDs and otherwise wait for GC + ContextCleaner.
-      // Safe here: every rep rebuilds its plan from scratch, so nothing
-      // cached at RDD level is referenced across query boundaries. The
-      // sweep is scratch-tagged: it skips any checkpoint RDD not minted by
-      // Checkpoints.scratch, whose truncated lineage could never recompute.
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-        blocking = true)
-      // clearCache() does NOT release broadcast blocks — those are reaped by
-      // the ContextCleaner only after the JVM garbage-collects the broadcast
-      // references. Across a 50+-query run the dead HashedRelations pile up
-      // in storage memory and the late memory-heavy queries pay for them in
-      // GC pressure; nudge the cleaner between queries.
-      System.gc()
+      Engine.resetBetweenQueries(spark)
       // host load sampled right after this query's reps: lets a reader
       // normalize each [min, median] for CONTEMPORANEOUS host contention
       // instead of inferring it from the run-level [before, after] pair
@@ -180,10 +162,7 @@ object Bench {
           val t0 = System.nanoTime()
           val t = try { fn(spark, sfDir).count(); Some((System.nanoTime() - t0) / 1e9) }
             catch { case _: Throwable => None }
-          spark.catalog.clearCache()
-          graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-            blocking = true)
-          System.gc()
+          Engine.resetBetweenQueries(spark)
           "\"" + name + "\":" + t.fold("null")(fmt)
         }
       // same role split as detailPath: only a closing run may touch the

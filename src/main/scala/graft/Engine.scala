@@ -71,6 +71,27 @@ object Engine {
     spark
   }
 
+  /** The between-query reset of Bench, Verify and the probe mains, so each
+    * query starts against a clean block store:
+    *  - `clearCache` drops SQL-cached plans (operators may cache
+    *    intermediates, e.g. LSH signature/candidate stages);
+    *  - the blocking scratch sweep ([[graft.operators.Checkpoints.sweepScratch]])
+    *    releases RDD-level persists and scratch-checkpoint blocks, which
+    *    otherwise wait for GC + ContextCleaner, and skips any checkpoint RDD
+    *    not minted by `Checkpoints.scratch`, whose truncated lineage could
+    *    never recompute;
+    *  - `System.gc()` lets the ContextCleaner reap dead broadcast blocks,
+    *    which `clearCache` does not release: across a 50+-query run the
+    *    dead HashedRelations pile up in storage memory and the late
+    *    memory-heavy queries pay for them in GC pressure.
+    * Safe only between queries: nothing cached at RDD level may be
+    * referenced across the boundary. */
+  def resetBetweenQueries(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    graft.operators.Checkpoints.sweepScratch(spark.sparkContext, blocking = true)
+    System.gc()
+  }
+
   /** Quiet the TWO benign per-sweep messages — and nothing else.
     * Bench/Verify sweep `getPersistentRDDs` between queries precisely to
     * reap dead scratch-checkpoint blocks

@@ -28,11 +28,7 @@ object QueryProbe {
       val n = fn(spark, dir).count()
       val tag = if (i == 0) "warmup" else s"run$i"
       println(f"PROBE $name $tag ${(System.nanoTime - t0) / 1e9}%.2f s ($n rows)")
-      if (coldReps) {
-        spark.catalog.clearCache()
-        graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
-        System.gc()
-      }
+      if (coldReps) Engine.resetBetweenQueries(spark)
     }
     val df = fn(spark, dir)
     df.count()

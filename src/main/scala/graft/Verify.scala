@@ -19,14 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // release operator-cached intermediates (see Bench) between queries;
-      // the tagged sweep also reaps scratch-checkpoint blocks
-      // (Checkpoints.scratch) without waiting for a GC+ContextCleaner
-      // cycle, while leaving any non-scratch checkpoint-rooted frame
-      // (whose blocks could never be recomputed) alone
-      spark.catalog.clearCache()
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-        blocking = true)
+      Engine.resetBetweenQueries(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
@@ -67,16 +68,73 @@ object SurrogateKey {
 }
 
 /** S4 + S6: truncate-and-reload sink and the empty-input guard
-  * (`etl_category.py:37-71`, `etl_orders.py:92-137`). `mode("overwrite")` IS
-  * the reference's TRUNCATE + batch INSERT + commit/rollback: Spark's commit
-  * protocol makes the swap atomic. */
+  * (`etl_category.py:37-71`, `etl_orders.py:92-137`). Every path sink runs
+  * ONE query execution, its write: the write itself carries the guard (and
+  * any audit aggregates) as an `observe()`, lands in a sibling staging
+  * directory, and only a non-empty result replaces the target. The target is missing only
+  * between the delete and the rename of that swap — not for the whole
+  * write, as with an in-place `mode("overwrite")`, which deletes the target
+  * before its job starts. */
 object Load {
+  /** Suffix of the sibling directory a guarded write lands in first. */
+  val StagingSuffix = "__loading"
+
+  /** The guarded write behind every path sink: `write(observed, staging)`
+    * runs once on `df.observe(count(*) AS rows, extra…)` into
+    * `<path>__loading`, so the row count (the guard) and the caller's audit
+    * aggregates come from the write job itself, not from a LIMIT-1 probe
+    * that plans and runs the input a second time. 0 rows: the staging
+    * directory is deleted and the target left untouched. Otherwise the
+    * staging directory replaces the target (the [[compact]] swap). Returns
+    * the observed metrics by name: `rows` and each of `extra`.
+    *
+    * A zero-column frame cannot be written by any file source, so it gets
+    * its metrics from a plain aggregate: empty → nothing written, non-empty
+    * → the write runs and raises the source's own error. */
+  def observedWrite(df: DataFrame, path: String, extra: Column*)(
+      write: (DataFrame, String) => Unit): Map[String, Any] = {
+    val metrics = count(lit(1)).as("rows") +: extra
+    def aggregated: Map[String, Any] = {
+      val r = df.agg(metrics.head, metrics.tail: _*).head()
+      r.getValuesMap[Any](r.schema.fieldNames.toSeq)
+    }
+    if (df.schema.isEmpty) {
+      val m = aggregated
+      if (m("rows") == 0L) return m
+    }
+    val target = new Path(path)
+    val staging = new Path(path + StagingSuffix)
+    val fs = target.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val obs = Observation()
+    try write(df.observe(obs, metrics.head, metrics.tail: _*), staging.toString)
+    catch { case e: Throwable => fs.delete(staging, true); throw e }
+    // Spark completes an observation whose metrics the executed plan lost
+    // (its CollectMetrics optimized away) with an empty row: recount then
+    val observed = obs.get
+    val m = if (observed.isEmpty) aggregated else observed
+    if (m("rows") == 0L) fs.delete(staging, true)
+    else swap(fs, staging, target)
+    m
+  }
+
+  /** [[observedWrite]] for a sink that needs only the guard: true iff rows
+    * were written. */
+  def guarded(df: DataFrame, path: String)(
+      write: (DataFrame, String) => Unit): Boolean =
+    observedWrite(df, path)(write)("rows") != 0L
+
+  /** Replace `target` by `staging`: the window without `target` is this
+    * delete plus rename, not the write that produced `staging`. */
+  private def swap(fs: FileSystem, staging: Path, target: Path): Unit = {
+    fs.delete(target, true)
+    if (!fs.rename(staging, target))
+      throw new java.io.IOException(s"could not rename $staging to $target")
+  }
+
   /** Returns false (and writes nothing) on empty input — the reference's
     * "skip load when extract failed" guard (`etl_category.py:38-40`). */
-  def overwrite(df: DataFrame, path: String): Boolean = {
-    if (df.isEmpty) false
-    else { df.write.mode("overwrite").parquet(path); true }
-  }
+  def overwrite(df: DataFrame, path: String): Boolean =
+    guarded(df, path)(_.write.mode("overwrite").parquet(_))
 
   /** Overwrite as a bucketed table: rows are hash-distributed into `buckets`
     * files per partition on `bucketCols` and each bucket sorted on them.
@@ -84,7 +142,12 @@ object Load {
     * the shuffle was paid once at write time instead of once per query,
     * which is the right trade for a fact table joined daily at 100 TB.
     * (Bucket metadata lives in the session catalog; `path` keeps the data
-    * external.) Asserted shuffle-free in OperatorSemanticsSpec. */
+    * external.) Asserted shuffle-free in OperatorSemanticsSpec.
+    *
+    * The one sink that keeps a separate `isEmpty` probe ahead of its write:
+    * `saveAsTable` registers `path` in the session catalog as the table's
+    * location, so the data cannot be written to a staging directory and
+    * swapped in under it the way [[observedWrite]] does. */
   def overwriteBucketed(df: DataFrame, table: String, path: String,
       buckets: Int, bucketCols: Seq[String]): Boolean = {
     if (df.isEmpty) false
@@ -104,13 +167,8 @@ object Load {
     * (e.g. fact tables partitioned by month) is the difference between a
     * pruned scan and a full-table read. */
   def overwritePartitioned(df: DataFrame, path: String,
-      partitionCols: Seq[String]): Boolean = {
-    if (df.isEmpty) false
-    else {
-      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-      true
-    }
-  }
+      partitionCols: Seq[String]): Boolean =
+    guarded(df, path)(_.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(_))
 
   /** Overwrite with a range-clustered layout (ZORDER-lite): rows are range-
     * partitioned on `sortCols` and sorted inside each file, so every file
@@ -124,14 +182,10 @@ object Load {
     * total bytes / target file size). */
   def overwriteSorted(df: DataFrame, path: String,
       sortCols: Seq[String], files: Int): Boolean = {
-    if (df.isEmpty) false
-    else {
-      val cols = sortCols.map(col)
-      df.repartitionByRange(files, cols: _*)
-        .sortWithinPartitions(cols: _*)
-        .write.mode("overwrite").parquet(path)
-      true
-    }
+    val cols = sortCols.map(col)
+    guarded(df, path)((d, p) => d.repartitionByRange(files, cols: _*)
+      .sortWithinPartitions(cols: _*)
+      .write.mode("overwrite").parquet(p))
   }
 
   /** Compact a directory of small files to ~`targetBytes` files — the
@@ -143,17 +197,14 @@ object Load {
     * re-grouped. Returns the new file count. */
   def compact(spark: org.apache.spark.sql.SparkSession, path: String,
       targetBytes: Long): Int = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
+    val hPath = new Path(path)
     val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bytes = fs.getContentSummary(hPath).getLength
     val files = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
+    val tmp = new Path(path + "__compacting")
     spark.read.parquet(path).coalesce(files)
       .write.mode("overwrite").parquet(tmp.toString)
-    // swap: the rewrite lands next to the original, then replaces it — the
-    // window without `path` is the rename pair, not the whole rewrite
-    fs.delete(hPath, true)
-    fs.rename(tmp, hPath)
+    swap(fs, tmp, hPath)
     files
   }
 }

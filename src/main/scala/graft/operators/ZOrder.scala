@@ -44,20 +44,15 @@ object ZOrder {
   /** Overwrite with a Z-ordered layout on (colA, colB): range-partition and
     * sort by the Morton key, so every file owns a compact rectangle of the
     * (a, b) plane and parquet min/max stats prune predicates on EITHER
-    * column. Same empty-input guard as the other [[Load]] sinks. */
+    * column. Same guarded write as the other [[Load]] sinks. */
   def overwriteZordered(df: DataFrame, path: String,
-      colA: String, colB: String, files: Int): Boolean = {
-    if (df.isEmpty) false
-    else {
-      val z = mortonKey(col(colA), col(colB))
-      df.withColumn("_zkey", z)
+      colA: String, colB: String, files: Int): Boolean =
+    Load.guarded(df, path)((d, p) =>
+      d.withColumn("_zkey", mortonKey(col(colA), col(colB)))
         .repartitionByRange(files, col("_zkey"))
         .sortWithinPartitions("_zkey")
         .drop("_zkey")
-        .write.mode("overwrite").parquet(path)
-      true
-    }
-  }
+        .write.mode("overwrite").parquet(p))
 
   /** 32-bit Morton code of two 16-bit keys via the magic-mask bit spread
     * (Hacker's Delight §7-2 / the classic Morton interleave): 4 shift-or-

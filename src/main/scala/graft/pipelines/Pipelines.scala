@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import graft.Tables
+import graft.{Schemas, Tables}
 import graft.operators._
 import graft.queries.Mart
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,6 +15,13 @@ import org.apache.spark.sql.functions._
   * is one Catalyst-compiled DAG executed only at the overwrite, with the
   * dimension→fact dependency expressed by reading the dimension's committed
   * parquet (the same "read own prior output" barrier as `etl_orders.py:48`).
+  * Each load is ONE Spark query execution: the empty-input guard and, for
+  * the fact, the V1/V2 audit ride the write as observed metrics
+  * ([[graft.operators.Load.observedWrite]]), and the mart's own tables are
+  * read back by their declared [[graft.Schemas]] — no LIMIT-1 probe and no
+  * parquet schema-inference job. The declared-schema reads are safe because
+  * PipelineSpec reads the written tables by inference and checks them
+  * against those same schemas.
   */
 final case class AuditReport(table: String, rows: Long, nullKeys: Long) {
   def ok(expectedRows: Long): Boolean = rows == expectedRows && nullKeys == 0
@@ -40,33 +47,24 @@ class MartPipelines(spark: SparkSession, sfDir: String, outDir: String) {
   def runFact(): Boolean =
     Load.overwrite(factFrame(), factPath)
 
-  /** E3 + V1/V2 fused: the audit metrics ride an `Observation` attached to
-    * the SAME job that writes the fact — the row count and null-surrogate
-    * count are accumulated executor-side during the overwrite, so the audit
+  /** E3 + V1/V2 fused: the null-surrogate count rides the guarded write's
+    * own observation, beside the row count that is its empty-input guard —
+    * both are accumulated executor-side during the overwrite, so the audit
     * costs zero additional scans. `auditFact()` (kept as the post-hoc
     * variant) re-reads the written table; at 100 TB that re-read is the
     * price of the whole load again. */
   def runFactObserved(): AuditReport = {
-    val frame = factFrame()
-    val obs = org.apache.spark.sql.Observation("fact_audit")
-    val observed = frame.observe(obs,
-      count(lit(1)).as("rows"),
-      count(when(col("product_key").isNull, lit(1))).as("null_keys"))
-    // S6 guard runs on the UN-observed plan: Observation latches onto the
-    // first action over its CollectMetrics node, and the guard's LIMIT-1
-    // probe would otherwise consume it with a truncated row count.
-    if (frame.isEmpty) AuditReport("fact_orders", 0L, 0L)
-    else {
-      observed.write.mode("overwrite").parquet(factPath)
-      AuditReport("fact_orders",
-        obs.get("rows").asInstanceOf[Long], obs.get("null_keys").asInstanceOf[Long])
-    }
+    val m = Load.observedWrite(factFrame(), factPath,
+      count(when(col("product_key").isNull, lit(1))).as("null_keys"))(
+      _.write.mode("overwrite").parquet(_))
+    AuditReport("fact_orders",
+      m("rows").asInstanceOf[Long], m("null_keys").asInstanceOf[Long])
   }
 
   private def factFrame(): DataFrame = {
     val l = Tables.load(spark, sfDir, "lineitem")
     val o = Tables.load(spark, sfDir, "orders")
-    val dim = spark.read.parquet(dimProductPath)
+    val dim = spark.read.schema(Schemas.dimProduct).parquet(dimProductPath)
       .select("product_key", "source_product_id")
 
     val fact = l.join(o, l("l_orderkey") === o("o_orderkey"), "inner")
@@ -82,7 +80,7 @@ class MartPipelines(spark: SparkSession, sfDir: String, outDir: String) {
         .withColumnRenamed("l_quantity", "quantity")
         .withColumnRenamed("l_discount", "discount")
         .withColumn("order_date", col("o_orderdate").cast("string")),
-      graft.Schemas.factOrderMetrics.fieldNames.toSeq)
+      Schemas.factOrderMetrics.fieldNames.toSeq)
   }
 
   /** Dimension-before-fact order (FK dependency `Project Plan2.md:68`). */
@@ -95,12 +93,15 @@ class MartPipelines(spark: SparkSession, sfDir: String, outDir: String) {
 
   /** V1 + V2 on the written fact table. */
   def auditFact(): AuditReport = {
-    val fact = spark.read.parquet(factPath)
+    val fact = factTable
     AuditReport("fact_orders", Audit.rowCount(fact),
       Audit.nullKeyCount(fact, "product_key"))
   }
 
   /** V3: top-10 fact rows by the money metric. */
   def auditTop10: DataFrame =
-    Audit.topK(spark.read.parquet(factPath), "extended_price_cents", 10)
+    Audit.topK(factTable, "extended_price_cents", 10)
+
+  private def factTable: DataFrame =
+    spark.read.schema(Schemas.factOrderMetrics).parquet(factPath)
 }

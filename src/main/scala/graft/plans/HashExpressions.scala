@@ -431,8 +431,14 @@ case class WinnowSelect(child: Expression) extends UnaryExpression {
   override def nullable: Boolean = true
   override def prettyName: String = "winnow_select"
 
+  /** Null elements are refused at analysis: `compute` reads every slot
+    * with getLong, which returns 0 for a null slot, so a null would be
+    * selected as a real 0 hash. */
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, false) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(LongType, true) => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an array<bigint> with no null elements " +
+        "(containsNull = false)")
     case other => TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires an array<bigint> argument, got " +
         other.simpleString(10))
@@ -516,6 +522,23 @@ case class IntersectCountLong(left: Expression, right: Expression)
 }
 
 object IntersectCountLong {
+  /** Largest power of two a JVM `long[]` can hold (the VM refuses arrays
+    * within a few slots of `Int.MaxValue`). */
+  val MaxCapacity: Int = 1 << 30
+
+  /** Table capacity for `n` right-side elements: the smallest power of two
+    * ≥ max(4, 2n), computed in `Long`: in `Int` the doubling loop
+    * overflows for n > 2^29 and never ends. Past [[MaxCapacity]] it fails
+    * with an error naming the function instead. */
+  def capacity(n: Int): Int = {
+    val need = math.max(4L, 2L * n)
+    if (need > MaxCapacity)
+      throw new IllegalArgumentException(s"intersect_count_i64: right array " +
+        s"of $n elements needs a table of $need slots, over the maximum " +
+        s"$MaxCapacity")
+    (java.lang.Long.highestOneBit(need - 1) << 1).toInt
+  }
+
   /** Open-addressing table (linear probing) sized to the next power of two
     * ≥ 2·|right|; 0 and null ride dedicated flags so the table can use 0
     * as its empty marker. A `counted` bitmap makes a duplicated left
@@ -525,8 +548,7 @@ object IntersectCountLong {
     * elements — so a fresh long[] beats any pooling complexity). */
   def compute(a: ArrayData, b: ArrayData): Long = {
     val n = b.numElements()
-    var cap = 4
-    while (cap < n * 2) cap <<= 1
+    val cap = capacity(n)
     val mask = cap - 1
     val table = new Array[Long](cap)
     var hasZero = false

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.operators.Load
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -116,26 +117,21 @@ object Sources {
   }
 
   /** Mirror sinks for round-tripping the text formats (header'd CSV /
-    * JSONL), with the same empty-input guard as [[graft.operators.Load]]. */
-  def writeCsv(df: DataFrame, path: String): Boolean = {
-    if (df.isEmpty) false
-    else { df.write.mode("overwrite").option("header", "true").csv(path); true }
-  }
+    * JSONL), through the same guarded write as [[graft.operators.Load]]:
+    * false and nothing written on empty input. */
+  def writeCsv(df: DataFrame, path: String): Boolean =
+    Load.guarded(df, path)(_.write.mode("overwrite").option("header", "true").csv(_))
 
-  def writeJsonl(df: DataFrame, path: String): Boolean = {
-    if (df.isEmpty) false
-    else { df.write.mode("overwrite").json(path); true }
-  }
+  def writeJsonl(df: DataFrame, path: String): Boolean =
+    Load.guarded(df, path)(_.write.mode("overwrite").json(_))
 
   /** ORC, the second columnar format next to parquet (stripe-level min/max
     * statistics, same pushdown story). Explicit schema on read, as always. */
   def orc(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).orc(path)
 
-  def writeOrc(df: DataFrame, path: String): Boolean = {
-    if (df.isEmpty) false
-    else { df.write.mode("overwrite").orc(path); true }
-  }
+  def writeOrc(df: DataFrame, path: String): Boolean =
+    Load.guarded(df, path)(_.write.mode("overwrite").orc(_))
 
   /** XML drops via Spark 4's built-in `xml` source (`rowTag` names the
     * repeated record element), same explicit-schema + quarantine contract
@@ -153,14 +149,9 @@ object Sources {
       .schema(withCorrupt(schema))
       .load(path)
 
-  def writeXml(df: DataFrame, path: String, rowTag: String): Boolean = {
-    if (df.isEmpty) false
-    else {
-      df.write.format("xml").option("rowTag", rowTag)
-        .mode("overwrite").save(path)
-      true
-    }
-  }
+  def writeXml(df: DataFrame, path: String, rowTag: String): Boolean =
+    Load.guarded(df, path)(
+      _.write.format("xml").option("rowTag", rowTag).mode("overwrite").save(_))
 
   /** Evolved-schema read over a parquet directory written in generations
     * (old files missing newer columns): per-file footers merge into the

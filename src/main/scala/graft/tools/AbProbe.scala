@@ -57,9 +57,7 @@ object AbProbe {
         val lbl = if (i == 0) "warmup" else s"run$i"
         println(f"AB $tag $lbl ${(System.nanoTime - t0) / 1e9}%.2f s ($rows rows)")
       }
-      spark.catalog.clearCache()
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
-      System.gc()
+      graft.Engine.resetBetweenQueries(spark)
     }
 
     timed("recompute") {

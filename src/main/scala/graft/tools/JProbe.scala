@@ -17,10 +17,7 @@ object JProbe {
         .simHashPairsPortable(docs, forceJ = Some(j)).count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"JPROBE j=$j rep=$r pairs=$n sec=$dt%.2f")
-      spark.catalog.clearCache()
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-        blocking = true)
-      System.gc()
+      graft.Engine.resetBetweenQueries(spark)
     }
     spark.stop()
   }

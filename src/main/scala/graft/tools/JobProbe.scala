@@ -69,9 +69,7 @@ object JobProbe {
     val t0w = System.nanoTime()
     fn(spark, dir).count()
     val warm = (System.nanoTime() - t0w) / 1e9
-    spark.catalog.clearCache()
-    graft.operators.Checkpoints.sweepScratch(spark.sparkContext, blocking = true)
-    System.gc()
+    graft.Engine.resetBetweenQueries(spark)
     val c = new Collector
     spark.sparkContext.addSparkListener(c)
     val t0 = System.nanoTime()

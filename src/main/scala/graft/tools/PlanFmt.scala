@@ -27,10 +27,7 @@ object PlanFmt {
         w.println("\n== executed (AQE-final) ==")
         w.println(executed)
       } finally w.close()
-      spark.catalog.clearCache()
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-        blocking = true)
-      System.gc()
+      graft.Engine.resetBetweenQueries(spark)
       println(s"PLANFMT wrote $outDir/${name}_$tag.txt")
     }
     spark.stop()

@@ -40,10 +40,7 @@ object PlanProbe {
         f"bhj=${n("BroadcastHashJoin")}%d smj=${n("SortMergeJoin")}%d " +
         f"skew=${n("skew=true")}%d aqeReads=${n("AQEShuffleRead")}%d " +
         f"load1m=${loadavg()}%.2f")
-      spark.catalog.clearCache()
-      graft.operators.Checkpoints.sweepScratch(spark.sparkContext,
-        blocking = true)
-      System.gc()
+      graft.Engine.resetBetweenQueries(spark)
     }
     spark.stop()
   }

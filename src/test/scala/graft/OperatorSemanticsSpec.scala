@@ -177,6 +177,67 @@ class OperatorSemanticsSpec extends AnyFunSuite {
     assert(spark.read.parquet(path).count() == 2)
   }
 
+  test("guarded sinks: every empty shape returns false promptly and leaves the table as it was") {
+    import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
+    import org.scalatest.time.SpanSugar._
+    implicit val signaler: Signaler = ThreadSignaler
+    val base = java.nio.file.Files.createTempDirectory("guarded").toString
+    val df = Seq((1L, "2024-01", 10.0), (2L, "2024-01", 20.0),
+      (3L, "2024-02", 30.0)).toDF("id", "month", "v")
+    val empties = Seq(
+      "range(0)" -> spark.range(0).select(col("id"),
+        lit("2024-01").as("month"), lit(1.0).as("v")),
+      "limit(0)" -> df.limit(0),
+      "filter(false)" -> df.filter(lit(false)),
+      // empty only at run time: the aggregate runs over no rows
+      "empty groupBy" -> df.filter(col("v") < 0.0).groupBy("id", "month")
+        .agg(sum("v").as("v")),
+      "zero-column" -> spark.emptyDataFrame)
+    type Sink = (org.apache.spark.sql.DataFrame, String) => Boolean
+    type Reader = String => org.apache.spark.sql.DataFrame
+    val sinks: Seq[(String, Sink, Reader)] = Seq(
+      ("Load.overwrite", (d, p) => Load.overwrite(d, p), p => spark.read.parquet(p)),
+      ("Load.overwritePartitioned", (d, p) => Load.overwritePartitioned(d, p, Seq("month")),
+        p => spark.read.parquet(p)),
+      ("Sources.writeCsv", (d, p) => graft.sources.Sources.writeCsv(d, p),
+        p => spark.read.option("header", "true").schema(df.schema).csv(p)))
+    def rows(r: Reader, p: String) =
+      r(p).select("id", "month", "v").as[(Long, String, Double)].collect().sorted.toSeq
+    val expected = df.as[(Long, String, Double)].collect().sorted.toSeq
+    sinks.foreach { case (sink, write, read) =>
+      val path = s"$base/${sink.replace('.', '_')}"
+      assert(write(df, path), sink)
+      empties.foreach { case (shape, empty) =>
+        val wrote = TimeLimits.failAfter(120.seconds)(write(empty, path))
+        assert(!wrote, s"$sink wrote $shape")
+        assert(rows(read, path) == expected, s"$sink: $shape changed the table")
+        assert(!new java.io.File(path + Load.StagingSuffix).exists,
+          s"$sink: $shape left its staging directory")
+      }
+    }
+    // a non-empty zero-column frame still reaches the source and fails
+    // there, leaving neither a staging directory nor a changed table
+    val path = s"$base/Load_overwrite"
+    intercept[Exception](Load.overwrite(spark.range(3).select(), path))
+    assert(!new java.io.File(path + Load.StagingSuffix).exists)
+    assert(rows(p => spark.read.parquet(p), path) == expected)
+  }
+
+  test("observedWrite: the guard and extra aggregates come from the write job") {
+    val path = java.nio.file.Files.createTempDirectory("observed").toString + "/t"
+    val df = Seq((1L, Some(5L)), (2L, None), (3L, None)).toDF("id", "key")
+    val m = Load.observedWrite(df, path,
+      count(when(col("key").isNull, lit(1))).as("null_keys"))(
+      _.write.mode("overwrite").parquet(_))
+    assert(m == Map("rows" -> 3L, "null_keys" -> 2L))
+    assert(spark.read.parquet(path).count() == 3)
+    val none = Load.observedWrite(df.filter(lit(false)), path,
+      count(when(col("key").isNull, lit(1))).as("null_keys"))(
+      _.write.mode("overwrite").parquet(_))
+    assert(none == Map("rows" -> 0L, "null_keys" -> 0L))
+    assert(spark.read.parquet(path).count() == 3)
+  }
+
   test("salted join equals the unsalted join on skewed data") {
     import graft.operators.SkewSalt
     // hot key 1L holds 5000 of 5050 left rows

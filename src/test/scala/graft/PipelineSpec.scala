@@ -38,12 +38,69 @@ class PipelineSpec extends AnyFunSuite {
     assert(observed.nullKeys == postHoc.nullKeys && observed.nullKeys == 0)
   }
 
+  test("each load is one query execution, its write: no isEmpty probe, no schema-inference job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val out = java.nio.file.Files.createTempDirectory("graft-mart-jobs").toString
+    val p = new MartPipelines(spark, sf, out)
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val outsideSql = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = "graft.pipeline-spec.sentinel"
+    val qel = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = queries.add(f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = queries.add(s"$f!")
+    }
+    val jl = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val props = Option(j.properties)
+        if (props.exists(_.getProperty(sentinel) != null)) outsideSql.add(sentinel)
+        else if (!props.exists(_.getProperty("spark.sql.execution.id") != null))
+          outsideSql.add(s"job ${j.jobId}")
+      }
+    }
+    // listener events arrive asynchronously but in order: a sentinel query
+    // run after the load marks where the load's own events end
+    def eventsOf(load: => Boolean): (Seq[String], Seq[String]) = {
+      queries.clear(); outsideSql.clear()
+      assert(load)
+      spark.sparkContext.setLocalProperty(sentinel, "1")
+      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty(sentinel, null)
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((!queries.contains("collect") || !outsideSql.contains(sentinel)) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      val qs = queries.toArray(Array.empty[String]).toSeq
+      val js = outsideSql.toArray(Array.empty[String]).toSeq
+      assert(qs.lastOption.contains("collect") && js.lastOption.contains(sentinel),
+        s"sentinel events not seen: $qs / $js")
+      (qs.dropRight(1), js.dropRight(1))
+    }
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      Seq[(String, () => Boolean)](
+        "runCategory" -> (() => p.runCategory()),
+        "runProduct" -> (() => p.runProduct()),
+        "runFactObserved" -> (() => p.runFactObserved().rows > 0)
+      ).foreach { case (load, run) =>
+        val (qs, js) = eventsOf(run())
+        assert(qs == Seq("command"), s"$load ran query executions $qs")
+        assert(js.isEmpty, s"$load ran Spark jobs outside a query execution: $js")
+      }
+    } finally {
+      spark.listenerManager.unregister(qel)
+      spark.sparkContext.removeSparkListener(jl)
+    }
+  }
+
   test("written mart tables conform to the declared target schemas") {
     val out = java.nio.file.Files.createTempDirectory("graft-mart3").toString
     val p = new MartPipelines(spark, sf, out)
     assert(p.runAll())
     def shape(df: org.apache.spark.sql.DataFrame) =
       df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    // read by inference on purpose: this check is what lets MartPipelines
+    // read its own tables back by the declared schemas
     assert(shape(spark.read.parquet(p.dimCategoryPath)) ==
       Schemas.dimCategory.fields.map(f => (f.name, f.dataType)).toSeq)
     assert(shape(spark.read.parquet(p.dimProductPath)) ==

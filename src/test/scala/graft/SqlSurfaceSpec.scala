@@ -31,6 +31,27 @@ class SqlSurfaceSpec extends AnyFunSuite {
     "', 'g')", // DuckDB 4-arg regexp_replace global flag; Spark is global by default
     "AS MATERIALIZED") // DuckDB CTE materialization hint (the q254/q267 spill guard)
 
+  test("winnow_select refuses arrays that may hold nulls at analysis") {
+    val ok = spark.sql("SELECT winnow_select(array(5L, 3L, 9L)) AS s")
+    assert(ok.collect().head.getSeq[org.apache.spark.sql.Row](0).nonEmpty)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT winnow_select(array(5L, CAST(NULL AS BIGINT), 9L))").collect())
+    assert(e.getMessage.contains("winnow_select") &&
+      e.getMessage.contains("no null elements"), e.getMessage)
+  }
+
+  test("intersect_count_i64 table capacity: exact below the cap, an error past it") {
+    import graft.plans.IntersectCountLong.{MaxCapacity, capacity}
+    assert(Seq(0, 1, 2, 3, 4, 5, 1000).map(capacity) ==
+      Seq(4, 4, 4, 8, 8, 16, 2048))
+    assert(capacity(1 << 29) == MaxCapacity)
+    // sizes whose Int doubling overflowed (and whose loop never ended)
+    Seq((1 << 29) + 1, 1 << 30, Int.MaxValue).foreach { n =>
+      val e = intercept[IllegalArgumentException](capacity(n))
+      assert(e.getMessage.contains("intersect_count_i64"), e.getMessage)
+    }
+  }
+
   test("oracle SQL in the common subset matches the DataFrame plans on spark.sql") {
     Tables.registerViews(spark, sf)
     var ran = 0

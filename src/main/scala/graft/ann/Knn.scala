@@ -220,7 +220,7 @@ object Knn {
     val qLit = typedlit(qd.toSeq)
     val probed = graft.Tables.parallelized(embs)
       .withColumn("cid", nearestCid(centroids))
-      .filter(col("cid").isin(probeCids: _*) && col("vec_id") =!= excludeId)
+      .filter(col("cid").isin(probeCids.toSeq: _*) && col("vec_id") =!= excludeId)
     // the metadata gate fires on the PROBED lists, before any cosine
     val gated = gate.fold(probed)(g =>
       probed.join(g.select("vec_id"), Seq("vec_id"), "left_semi"))

@@ -1025,7 +1025,7 @@ object PortableIvfPqIndex {
         // 2. surviving rows of affected partitions only (PartitionFilters
         // prune the scan to exactly those directories)
         readCodes(spark, path)
-          .filter(col("cid").isin(affected.map(Integer.valueOf): _*))
+          .filter(col("cid").isin(affected.map(Integer.valueOf).toSeq: _*))
           .join(broadcast(t.select("vec_id")), Seq("vec_id"), "left_anti")
           .write.mode("overwrite").partitionBy("cid")
           .parquet(scratch.toString)

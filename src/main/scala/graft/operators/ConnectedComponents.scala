@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
@@ -28,16 +28,11 @@ import org.apache.spark.storage.StorageLevel
   * same (vertices, edges) input yields the same labeling on any cluster
   * layout, which is what makes the result DuckDB-oracle-checkable.
   */
-/** Checkpoint hygiene for iterative operators (connected components,
-  * PageRank): the block-store RDD behind a `localCheckpoint(eager = true)`
-  * Dataset — its plan is a single [[LogicalRDD]] leaf holding the
-  * materialized InternalRow RDD. Iterative loops free each round's blocks
-  * the moment the next round has materialized: the ContextCleaner only
-  * reaps checkpoint blocks after the JVM happens to GC the Dataset
-  * reference, which across a long-lived session (or a 129-query bench run)
-  * leaves O(rounds) dead snapshots pinned in storage memory, and later
-  * workloads pay for them in GC pressure (VERDICT r6: q58 benched 3.9× its
-  * solo time for exactly this reason). */
+/** Scratch checkpoints: the block-store RDD behind a
+  * `localCheckpoint(eager = true)` Dataset — its plan is a single
+  * [[LogicalRDD]] leaf holding the materialized InternalRow RDD. Iterative
+  * kernels free their rounds' blocks through [[Rounds]], whose scaladoc
+  * states when that is safe. */
 private[graft] object Checkpoints {
   def rddOf(df: DataFrame): Option[RDD[InternalRow]] =
     df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
@@ -55,12 +50,24 @@ private[graft] object Checkpoints {
     * executor loss fails the query instead of recomputing — acceptable
     * for within-query scratch, NOT for cross-query shared frames (those
     * stay in the stamped [[graft.queries.SharedFrames]] registry, which
-    * owns an explicit eviction lifecycle). */
-  def scratch(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    rddOf(out).foreach(r => scratchIds.add(r.id))
-    out
+    * owns an explicit eviction lifecycle). A frame that already IS a live
+    * scratch checkpoint (a bare [[LogicalRDD]] leaf from the scratch set)
+    * comes back unchanged: a second copy would rewrite the same rows. */
+  def scratch(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
+    case lr: LogicalRDD if scratchIds.contains(lr.rdd.id) => df
+    case _ =>
+      val out = df.localCheckpoint(eager = true)
+      rddOf(out).foreach(r => scratchIds.add(r.id))
+      out
   }
+
+  /** Free the blocks behind each scratch frame now, not at the next sweep.
+    * Only for frames nothing will read again (see [[Rounds]]). */
+  def release(dfs: DataFrame*): Unit =
+    dfs.flatMap(rddOf).foreach { r =>
+      r.unpersist(blocking = false)
+      scratchIds.remove(r.id)
+    }
 
   /** True iff `df`'s analyzed plan (subqueries included) reads a
     * checkpoint minted by [[scratch]] and not yet swept — i.e. `df` dies
@@ -80,34 +87,26 @@ private[graft] object Checkpoints {
     * Spark job per round reading the just-written checkpoint blocks (r16
     * measurement: one such job per BFS/CC round at 0.02–0.07 s each, ~10%
     * of a fixed-point query at sf0.1). Counting inside the checkpoint's
-    * own execution makes the probe free. Falls back to the counting job
-    * if the metric is unavailable (defensive — observe is populated by
-    * any full execution of the plan, which eager localCheckpoint is). */
-  def scratchCount(df: DataFrame, pred: org.apache.spark.sql.Column)
-      : (DataFrame, Long) = {
-    val (out, row) = scratchAgg(df,
-      Seq(coalesce(sum(when(pred, 1L)), lit(0L)).cast("long").as("n")))
-    row match {
-      case Some(r) => (out, r.getAs[Long]("n"))
-      case None => (out, out.filter(pred).count())
-    }
-  }
+    * own execution makes the probe free. */
+  def scratchCount(df: DataFrame, pred: Column): (DataFrame, Long) =
+    scratchAgg(df, Seq(coalesce(sum(when(pred, 1L)), lit(0L)).cast("long")
+      .as("n"))) match { case (out, row) => (out, row.getLong(0)) }
 
   /** General form of [[scratchCount]]: materialize `df` and return the
-    * given aggregates computed by the SAME job via `Dataset.observe`
-    * (None if the metric did not surface — callers fall back to an
-    * explicit aggregate over the returned checkpointed frame). */
-  def scratchAgg(df: DataFrame, aggs: Seq[org.apache.spark.sql.Column])
-      : (DataFrame, Option[org.apache.spark.sql.Row]) = {
+    * given (named) aggregates computed by the SAME job via
+    * `Dataset.observe`. Should the metric not surface (observe is filled by
+    * any full execution of the plan, which an eager checkpoint is), the
+    * same aggregates run over the materialized frame instead. */
+  def scratchAgg(df: DataFrame, aggs: Seq[Column]): (DataFrame, Row) = {
     val name = "conv_" + java.util.UUID.randomUUID.toString.take(8)
     val observed = df.observe(name, aggs.head, aggs.tail: _*)
     val out = scratch(observed)
-    (out, observed.queryExecution.observedMetrics.get(name))
+    (out, observed.queryExecution.observedMetrics.getOrElse(name,
+      out.agg(aggs.head, aggs.tail: _*).head()))
   }
 
-  /** Ids of every checkpoint RDD minted by [[scratch]] and not yet swept.
-    * Ids are cheap ints, so a freed-by-its-loop id lingering here until the
-    * next sweep is harmless; the set is drained on every sweep. */
+  /** Ids of every checkpoint RDD minted by [[scratch]] and not yet
+    * released or swept; the set is drained on every sweep. */
   private val scratchIds =
     java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 
@@ -155,9 +154,7 @@ private[graft] object Checkpoints {
 }
 
 object ConnectedComponents {
-
-  private def checkpointRdd(df: DataFrame): Option[RDD[InternalRow]] =
-    Checkpoints.rddOf(df)
+  import Rounds.Round
 
   /** @param vertices one column `id` (LongType) — every vertex to label,
     *                 including isolated ones (they come back as singletons).
@@ -175,80 +172,62 @@ object ConnectedComponents {
     // checkpoint stores raw rows.
     val sym = Checkpoints.scratch(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
-
-    // Only edge-touched vertices iterate: an isolated vertex can never change
-    // its label, so it stays out of every round's shuffle entirely and is
-    // unioned back as a singleton at the end. In a dedup corpus the touched
-    // subgraph is the near-dup fraction — a sliver of the corpus — so the
-    // loop's working set scales with the duplicates, not the data.
-    var labels = Checkpoints.scratch(
-      sym.select(col("src").as("id")).distinct()
-        .select(col("id"), col("id").as("comp")))
-
-    var changed = 1L
-    var iters = 0
-    // the previous round's checkpoint blocks — safe to free once the round
-    // that read them has itself materialized (checkpointed RDDs have no
-    // lineage, so an unpersist before the reader runs would lose the data)
-    var retired: Option[RDD[InternalRow]] = checkpointRdd(labels)
     try {
-      while (changed > 0 && iters < maxIters) {
-        // (a) min label among each vertex's neighbors (one shuffle dst→src)
-        val nbrMin = sym
-          .join(labels.select(col("id").as("dst"), col("comp")), "dst")
-          .groupBy(col("src").as("id")).agg(min("comp").as("nbr"))
-        val stepped = labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
-            (coalesce(col("nbr"), col("comp")) < col("comp")).as("chg"))
-          .persist(StorageLevel.MEMORY_AND_DISK) // consumed twice by the jump join
-        // (b) pointer-jump: comp := min(comp, label(comp)). Labels only ever
-        // decrease toward the component's min id, so the fixpoint is the
-        // same — but a length-k label chain becomes length ⌈k/2⌉ per round.
-        // The round result is local-checkpointed, not just persisted: the
-        // jump self-join references the round's plan TWICE, so carrying
-        // lineage forward would double the logical plan every round —
-        // checkpointing keeps the per-round plan constant-size.
-        val jmap = stepped.select(col("id").as("jid"), col("comp").as("jump"))
-        // the changed-count rides the checkpoint job itself (observe
-        // accumulator) instead of a per-round counting job over the
-        // just-written blocks
-        val (next, nChanged) = Checkpoints.scratchCount(
-          stepped.join(jmap, col("comp") === col("jid"), "left")
+      // Only edge-touched vertices iterate: an isolated vertex can never
+      // change its label, so it stays out of every round's shuffle entirely
+      // and is unioned back as a singleton at the end. In a dedup corpus the
+      // touched subgraph is the near-dup fraction — a sliver of the corpus —
+      // so the loop's working set scales with the duplicates, not the data.
+      val labels0 = Checkpoints.scratch(
+        sym.select(col("src").as("id")).distinct()
+          .select(col("id"), col("id").as("comp")))
+      val (last, _) = Rounds.iterate(Round(labels0, Seq(labels0)), maxIters) {
+        (labels, _) =>
+          // (a) min label among each vertex's neighbors (one shuffle dst→src)
+          val nbrMin = sym
+            .join(labels.select(col("id").as("dst"), col("comp")), "dst")
+            .groupBy(col("src").as("id")).agg(min("comp").as("nbr"))
+          val stepped = labels.join(nbrMin, Seq("id"), "left")
             .select(col("id"),
-              least(col("comp"), coalesce(col("jump"), col("comp"))).as("comp"),
-              (col("chg") || coalesce(col("jump"), col("comp")) < col("comp")).as("chg")),
-          col("chg"))
-        changed = nChanged
-        stepped.unpersist(blocking = false)
-        // `next` is materialized (eager checkpoint), so the PREVIOUS round's
-        // snapshot can never be read again — free its blocks now instead of
-        // waiting for a GC+ContextCleaner cycle that may never come
-        retired.foreach(_.unpersist(blocking = false))
-        retired = checkpointRdd(next)
-        labels = next.drop("chg")
-        iters += 1
+              least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
+              (coalesce(col("nbr"), col("comp")) < col("comp")).as("chg"))
+            .persist(StorageLevel.MEMORY_AND_DISK) // consumed twice by the jump join
+          // (b) pointer-jump: comp := min(comp, label(comp)). Labels only ever
+          // decrease toward the component's min id, so the fixpoint is the
+          // same — but a length-k label chain becomes length ⌈k/2⌉ per round.
+          // The round result is local-checkpointed, not just persisted: the
+          // jump self-join references the round's plan TWICE, so carrying
+          // lineage forward would double the logical plan every round —
+          // checkpointing keeps the per-round plan constant-size.
+          val jmap = stepped.select(col("id").as("jid"), col("comp").as("jump"))
+          // the changed-count rides the checkpoint job itself (observe
+          // accumulator) instead of a per-round counting job over the
+          // just-written blocks
+          val (next, nChanged) = Checkpoints.scratchCount(
+            stepped.join(jmap, col("comp") === col("jid"), "left")
+              .select(col("id"),
+                least(col("comp"), coalesce(col("jump"), col("comp"))).as("comp"),
+                (col("chg") ||
+                  coalesce(col("jump"), col("comp")) < col("comp")).as("chg")),
+            col("chg"))
+          stepped.unpersist(blocking = false)
+          Round(next.drop("chg"), Seq(next), more = nChanged > 0)
       }
-      require(changed == 0,
-        s"connected components did not converge in $maxIters rounds — " +
-          s"with pointer jumping this needs a component of diameter ~2^$maxIters; " +
-          "check the edge input before raising maxIters")
-      // singletons rejoin here: left join against the converged labels is one
-      // broadcast-or-hash join, not O(rounds) of them
-      val all = vertices.select(col("id"))
-        .join(labels.withColumnRenamed("comp", "lbl"), Seq("id"), "left")
-        .select(col("id"), coalesce(col("lbl"), col("id")).as("comp"))
-      // detach the result from the iteration state: the caller gets a plan
-      // over ONE stable local checkpoint; the final round's snapshot (the
-      // only per-round blocks still held) is freed right after this
-      // materializes, so run() leaves exactly the result's blocks behind
-      val out = Checkpoints.scratch(all)
-      retired.foreach(_.unpersist(blocking = false))
-      retired = None
-      out
-    } finally {
-      retired.foreach(_.unpersist(blocking = false)) // non-convergence path
-      checkpointRdd(sym).foreach(_.unpersist(blocking = false))
-    }
+      try {
+        require(!last.more,
+          s"connected components did not converge in $maxIters rounds — " +
+            s"with pointer jumping this needs a component of diameter ~2^$maxIters; " +
+            "check the edge input before raising maxIters")
+        // singletons rejoin here: left join against the converged labels is
+        // one broadcast-or-hash join, not O(rounds) of them
+        val all = vertices.select(col("id"))
+          .join(last.state.withColumnRenamed("comp", "lbl"), Seq("id"), "left")
+          .select(col("id"), coalesce(col("lbl"), col("id")).as("comp"))
+        // detach the result from the iteration state: the caller gets a plan
+        // over ONE stable local checkpoint, and the final round's blocks are
+        // freed once it has materialized
+        Checkpoints.scratch(all)
+      } finally Checkpoints.release(last.frames: _*)
+    } finally Checkpoints.release(sym)
   }
 }

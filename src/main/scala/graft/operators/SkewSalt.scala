@@ -25,7 +25,7 @@ object SkewSalt {
       leftKey: String, rightKey: String, salts: Int): DataFrame = {
     require(salts > 0, "salts must be positive")
     val l = left.withColumn("__salt",
-      pmod(xxhash64(struct(left.columns.map(col): _*)), lit(salts.toLong)))
+      pmod(xxhash64(struct(left.columns.toSeq.map(col): _*)), lit(salts.toLong)))
     val r = right.withColumn("__salt",
       explode(sequence(lit(0L), lit(salts.toLong - 1))))
     l.join(r, l(leftKey) === r(rightKey) && l("__salt") === r("__salt"), "inner")

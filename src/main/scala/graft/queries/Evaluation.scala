@@ -969,7 +969,7 @@ object Evaluation {
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     def round(v: Array[Long]): DataFrame =
       qv.withColumn("dot", call_function("dot_i64", col("qv"),
-          array(v.map(lit(_)): _*)))
+          array(v.toSeq.map(lit(_)): _*)))
         .select(posexplode(col("qv")).as(Seq("pos", "qd")), col("dot"))
         .groupBy("pos").agg(sum(expr("qd * dot")).as("u"))
         // the normalization window runs on the |dims|-row aggregate —
@@ -978,7 +978,7 @@ object Evaluation {
         .withColumn("s", expr("m div 1024 + 1"))
         .withColumn("v",
           expr("CASE WHEN u < 0 THEN -((-u) div s) ELSE u div s END"))
-    val dims = qv.select(size(col("qv"))).head.getInt(0)
+    val dims = qv.select(size(col("qv"))).head().getInt(0)
     var v = Array.fill(dims)(1000L)
     for (_ <- 1 to 2) // rounds 1–2 fetch the |dims|-long parameter
       v = round(v).select("pos", "v").collect()

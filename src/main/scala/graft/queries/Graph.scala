@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.Tables
-import graft.operators.Checkpoints
+import graft.operators.{Checkpoints, Rounds}
+import graft.operators.Rounds.Round
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -56,13 +57,11 @@ object Graph {
     * value rides as a coalesce DEFAULT instead of |V| join rows per round —
     * the frame is bounded by the pointed-at set, and the per-round plan is
     * exactly one join + one map-combined aggregate. Rounds materialize via
-    * eager scratch checkpoints (the [[graft.operators.Checkpoints]]
-    * discipline) so each round's measured size feeds the next round's join
-    * planning WITHOUT stranding CacheManager entries; each retired round's
-    * blocks are freed the moment the round that read them has itself
-    * materialized (localCheckpoint preserves the hash(src) layout in the
-    * LogicalRDD, so the per-round join still reuses the partitioning).
-    * The returned lazy plan reads only the edge and final-round
+    * eager scratch checkpoints so each round's measured size feeds the
+    * next round's join planning WITHOUT stranding CacheManager entries
+    * (localCheckpoint preserves the hash(src) layout in the LogicalRDD, so
+    * the per-round join still reuses the partitioning); [[Rounds]] frees
+    * them. The returned lazy plan reads only the edge and final-round
     * checkpoints, whose blocks die with the result reference. */
   def pageRank(rawEdges: DataFrame, rounds: Int): DataFrame =
     pageRankSeeded(rawEdges, rounds, seed = None)
@@ -99,8 +98,7 @@ object Graph {
     val baseSrc =
       if (seeded) when(col("seed_src"), lit(150000L)).otherwise(lit(0L))
       else lit(150000L)
-    var ranks: DataFrame = null
-    for (i <- 1 to rounds) {
+    val (last, _) = Rounds.iterate(Round[DataFrame](null), rounds) { (ranks, i) =>
       val joined =
         if (i == 1) edges.withColumn("r", initSrc)
         else edges
@@ -120,12 +118,9 @@ object Graph {
                 col("csum")).as("r"))
         else
           agged.groupBy("node").agg((lit(150000L) + sum("c")).as("r")))
-      // `next` is materialized, so the previous round's snapshot can never
-      // be read again — free its blocks now, not at some future GC
-      if (ranks != null)
-        Checkpoints.rddOf(ranks).foreach(_.unpersist(blocking = false))
-      ranks = next
+      Round(next, Seq(next))
     }
+    val ranks = last.state
     if (seeded) {
       // node universe WITH its (functionally dependent) seed flag, so the
       // never-pointed-at default needs no md5 re-evaluation either
@@ -428,8 +423,8 @@ object Graph {
     * final rounds are cheap no-change passes), each round one edges⋈dist
     * hash join + one map-combined min aggregate, the same
     * bounded-per-round shape as [[pageRank]]: no frontier queue on the
-    * driver, rounds materialized via localCheckpoint-free persist/count so
-    * retired rounds release immediately. Unreached vertices report -1.
+    * driver, rounds materialized as scratch checkpoints that [[Rounds]]
+    * retires. Unreached vertices report -1.
     * The oracle unrolls the identical rounds as chained CTEs. */
   def q138(spark: SparkSession, dir: String): DataFrame =
     bfsHops(coPurchaseEdges(spark, dir), rounds = 6)
@@ -450,9 +445,7 @@ object Graph {
     *    carry-forward join), so carrying lineage doubles the analyzed plan
     *    every round and cache-lookup canonicalization goes exponential in
     *    the round count — the cost was driver-side planning, not
-    *    execution. Retired rounds' checkpoint RDDs are freed explicitly
-    *    ([[graft.operators.Checkpoints]]), the ConnectedComponents
-    *    discipline.
+    *    execution. [[Rounds]] frees each retired round's blocks.
     *  - Only the FRONTIER (nodes first settled in the previous round)
     *    propagates, not the whole settled set. Identical labels: in
     *    single-source level-synchronous BFS an unsettled vertex can only
@@ -471,20 +464,17 @@ object Graph {
     // cache); the checkpoint stores raw rows, keeps the hash(u) layout in
     // the LogicalRDD (the pageRank edge-cache discipline), and its blocks
     // are swept at the query boundary like every other scratch frame.
-    val sym = graft.operators.Checkpoints.scratch(
+    val sym = Checkpoints.scratch(
       edges.select(col("a").as("u"), col("b").as("v"))
         .union(edges.select(col("b").as("u"), col("a").as("v")))
         .repartition(col("u")))
     val src = sym.agg(min(least(col("u"), col("v"))).as("s"))
-    var dist = graft.operators.Checkpoints.scratch(
+    val dist0 = Checkpoints.scratch(
       sym.select(col("u").as("node")).distinct()
         .crossJoin(src)
         .select(col("node"),
           when(col("node") === col("s"), lit(0L)).otherwise(lit(null)).as("dist")))
-    var retired = graft.operators.Checkpoints.rddOf(dist)
-    var r = 1
-    var settling = true
-    while (r <= rounds && settling) {
+    val (last, _) = Rounds.iterate(Round(dist0, Seq(dist0)), rounds) { (dist, r) =>
       val frontier = dist.filter(col("dist") === lit(r - 1L))
         .select(col("node").as("u"))
       // distinct, not groupBy-min: every frontier-adjacent unsettled node
@@ -500,22 +490,15 @@ object Graph {
       // settled-this-round count rides the checkpoint job itself
       // (observe accumulator, Checkpoints.scratchCount) instead of a
       // per-round probe job over the just-written snapshot.
-      val (next, nSettled) = graft.operators.Checkpoints.scratchCount(
+      val (next, nSettled) = Checkpoints.scratchCount(
         dist.join(hop, Seq("node"), "left")
           .select(col("node"), coalesce(col("dist"), col("nd")).as("dist")),
         col("dist") === lit(r.toLong))
-      // `next` is materialized, so the previous snapshot is unreachable —
-      // free it now rather than after an eventual GC+ContextCleaner cycle
-      retired.foreach(_.unpersist(blocking = false))
-      retired = graft.operators.Checkpoints.rddOf(next)
-      dist = next
-      settling = nSettled > 0
-      r += 1
+      Round(next, Seq(next), more = nSettled > 0)
     }
-    graft.operators.Checkpoints.rddOf(sym)
-      .foreach(_.unpersist(blocking = false))
+    Checkpoints.release(sym)
     // the final round's checkpoint backs the returned plan — left live
-    dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+    last.state.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
   }
 
   val q138Sql: String = {
@@ -641,17 +624,9 @@ object Graph {
     * each half-round (the node table is catalog-bounded; a graph whose
     * node table outgrows executor memory needs the co-partitioned variant,
     * a different declared regime), and each round's raw aggregates are
-    * eagerly checkpointed with the previous round's blocks freed (the
-    * pageRankSeeded discipline).
-    *
-    * SCRATCH LIFECYCLE (r13 ADVICE #4): the FINAL round's aRaw/hRaw (plus
-    * eBase and nodes) back the returned lazy frame and so stay checkpointed
-    * after this function returns — they are reaped by the session's
-    * between-query block sweep (Bench/Verify unpersist all RDDs between
-    * queries). A caller using hits() as a library primitive in a long-lived
-    * session (the PropertySpec loop shape) should call
-    * `Checkpoints.sweepScratch(sc)` after consuming the result, or repeated
-    * calls accumulate dead localCheckpoint blocks. */
+    * eagerly checkpointed and retired by [[Rounds]]. The final round's
+    * frames (plus eBase and nodes) back the returned lazy frame, so they
+    * live until the between-query sweep (`Checkpoints.sweepScratch`). */
   def hits(rawEdges: DataFrame, rounds: Int): DataFrame = {
     // the edge DISCOVERY plan (a corpus-wide window + groupBy upstream) is
     // materialized exactly once — a first cut hung three consumers off the
@@ -677,23 +652,21 @@ object Graph {
     // aggregate twice (once under the max, once under the checkpoint) —
     // measured 9.0 s at ×10 vs this shape's, on the same graph where the
     // 5-round q124 costs 2.2 s.
-    var hub: DataFrame = nodes.withColumn("h", lit(1000000L))
-    var auth: DataFrame = null
-    var retired: Seq[DataFrame] = Nil
     // the renormalizing MAX rides each half-round's checkpoint job as an
     // observe accumulator (Checkpoints.scratchAgg) and enters the next
     // plan as a LITERAL — the q30 parameter-fetch pattern. The old shape
     // paid a 1-row max job + a broadcast crossJoin per half-round (6 of
     // each per q267 execution) for the same number.
-    def rawMax(df: DataFrame): (DataFrame, Long) = {
-      val (out, row) = Checkpoints.scratchAgg(df,
-        Seq(greatest(coalesce(max(col("v")), lit(1L)), lit(1L)).as("mx")))
-      (out, row.map(_.getAs[Long]("mx")).getOrElse(
-        out.agg(greatest(max(col("v")), lit(1L))).head().getLong(0)))
-    }
+    def rawMax(df: DataFrame): (DataFrame, Long) =
+      Checkpoints.scratchAgg(df,
+        Seq(greatest(coalesce(max(col("v")), lit(1L)), lit(1L)).as("mx"))) match {
+        case (out, row) => (out, row.getLong(0))
+      }
     def renorm(raw: DataFrame, mx: Long, out: String): DataFrame =
       raw.select(col("node"), expr(s"v * 1000000 div $mx").as(out))
-    for (_ <- 1 to rounds) {
+    val init = Round[(DataFrame, DataFrame)](
+      (null, nodes.withColumn("h", lit(1000000L))))
+    val (last, _) = Rounds.iterate(init, rounds) { case ((_, hub), _) =>
       // the ≤|V| score frame is BROADCAST into the edge blocks: scratch
       // frames carry no useful size stats, so an unhinted join planned as
       // a sort-merge that re-sorted all |E| edges EVERY half-round
@@ -707,18 +680,15 @@ object Graph {
             Seq("src"))
           .groupBy(col("dst").as("node"))
           .agg(sum(expr("wt * h")).as("v")))
-      val nextAuth = renorm(aRaw, aMx, "a")
+      val auth = renorm(aRaw, aMx, "a")
       val (hRaw, hMx) = rawMax(
         eBase.join(broadcast(
-            nextAuth.select(col("node").as("dst"), col("a"))), Seq("dst"))
+            auth.select(col("node").as("dst"), col("a"))), Seq("dst"))
           .groupBy(col("src").as("node"))
           .agg(sum(expr("wt * a")).as("v")))
-      val nextHub = renorm(hRaw, hMx, "h")
-      retired.foreach(f =>
-        Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-      retired = Seq(aRaw, hRaw)
-      auth = nextAuth; hub = nextHub
+      Round((auth, renorm(hRaw, hMx, "h")), Seq(aRaw, hRaw))
     }
+    val (auth, hub) = last.state
     nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
       .na.fill(0L, Seq("a", "h"))
   }
@@ -811,19 +781,14 @@ object Graph {
     * round shuffles up to the undirected edge count where a PageRank
     * round map-combines to |V|; measured ~2.7–3.0× q124-per-round at
     * ×10/×30 (same JVM, `SCALING_r14.json`), the inherent price of
-    * label-valued votes. Per-round score frames are eagerly checkpointed and the
-    * previous round's retired one sweep later (the pageRankSeeded
-    * discipline); callers outside the bench sweep should
-    * `Checkpoints.sweepScratch` after consuming the result. */
-  /** @param inputMaterialized callers whose edge frame is ALREADY a
-    *        materialized scratch checkpoint (q305 shares one with its
-    *        modularity pass) pass true to skip the redundant copy; the
-    *        default re-materializes arbitrary (possibly expensive) caller
-    *        lineage exactly once. */
-  def labelPropagation(rawEdges: DataFrame, rounds: Int,
-      inputMaterialized: Boolean = false): DataFrame = {
-    val eDir =
-      if (inputMaterialized) rawEdges else Checkpoints.scratch(rawEdges)
+    * label-valued votes. Per-round label frames are eagerly checkpointed
+    * and retired by [[Rounds]]; callers outside the bench sweep should
+    * `Checkpoints.sweepScratch` after consuming the result. The input is
+    * materialized once: arbitrary (possibly expensive) caller lineage is
+    * copied, an edge frame that already is a scratch checkpoint (q305
+    * shares one with its modularity pass) is used as it is. */
+  def labelPropagation(rawEdges: DataFrame, rounds: Int): DataFrame = {
+    val eDir = Checkpoints.scratch(rawEdges)
     // the undirected frame stays LAZY on purpose (r17; the q305 und lesson
     // generalized): its union is a pair of projections over eDir's
     // materialized blocks, so each round reads the |E| checkpoint twice —
@@ -835,9 +800,8 @@ object Graph {
       .union(eDir.select(col("dst").as("node"), col("src").as("nbr"),
         col("wt")))
     val nodes = Checkpoints.scratch(e.select("node").distinct())
-    var lbl: DataFrame = nodes.withColumn("lbl", col("node"))
-    var retired: Seq[DataFrame] = Nil
-    for (_ <- 1 to rounds) {
+    val init = Round(nodes.withColumn("lbl", col("node")))
+    Rounds.iterate(init, rounds) { (lbl, _) =>
       // every node has >= 1 incident edge by construction (nodes derive
       // from edges), so the vote aggregate covers all nodes — no left join.
       // The round checkpoints the <=|V| LABEL frame, with the argmax fused
@@ -855,12 +819,8 @@ object Graph {
           .groupBy("node")
           .agg(min(struct((-col("w")).as("nw"), col("lbl").as("l"))).as("b"))
           .select(col("node"), col("b.l").as("lbl")))
-      retired.foreach(f =>
-        Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-      retired = Seq(next)
-      lbl = next
-    }
-    lbl
+      Round(next, Seq(next))
+    }._1.state
   }
 
   /** q272 label-propagation communities (new r14) — the third classic
@@ -1017,15 +977,16 @@ object Graph {
     // (r17) makes the discovery itself once-per-session, and this scratch
     // copy keeps the 3 modularity consumers + 3 LPA rounds on raw-row
     // blocks instead of repeated CachedBatch decompression.
-    // inputMaterialized: the LPA kernel must NOT take a second checkpoint
-    // copy of this very frame (the r16 shape did — one redundant |E| write
-    // per execution). The undirected frame itself stays LAZY on purpose:
+    // the LPA kernel takes no second checkpoint copy of this very frame
+    // (scratch returns a live checkpoint unchanged; the r16 shape wrote a
+    // redundant |E| copy per execution). The undirected frame itself
+    // stays LAZY on purpose:
     // its union is free on top of the materialized edges, and an A/B at
     // ×10 measured eager-checkpointing the 2|E| frame SLOWER (min 31.4 vs
     // 18.8 s — block-store pressure beats the cheap re-read) — the r16
     // lesson that scratch is for expensive lineage, not every shared frame.
     val edges = Checkpoints.scratch(transitionEdges(spark, dir))
-    val lbl = labelPropagation(edges, rounds = 3, inputMaterialized = true)
+    val lbl = labelPropagation(edges, rounds = 3)
     val und = edges
       .select(col("src").as("node"), col("dst").as("nbr"), col("wt"))
       .union(edges.select(col("dst").as("node"), col("src").as("nbr"),
@@ -1090,9 +1051,10 @@ object Graph {
     * each round is one alive-semi-join pair prune (two id-keyed joins), one
     * map-combined degree aggregate, and one 1-row census read — Θ(rounds·
     * |E|) with |V|-bounded shuffles, frames shrinking monotonically; per-
-    * round frames are eagerly checkpointed and retired one round late (the
-    * [[labelPropagation]] discipline). The census rows themselves are
-    * driver-side (≤ rounds tuples), not a collect of data rows. */
+    * round frames are eagerly checkpointed and retired by [[Rounds]]. The
+    * census rows themselves are driver-side (≤ rounds tuples), not a
+    * collect of data rows, so even the last round's frames are freed
+    * before the call returns. */
   def kCoreCensus(spark: SparkSession, rawEdges: DataFrame, k0: Option[Int],
       rounds: Int): DataFrame = {
     import spark.implicits._
@@ -1103,61 +1065,45 @@ object Graph {
       eDir.select(col("src").as("node"), col("dst").as("nbr"))
         .union(eDir.select(col("dst").as("node"), col("src").as("nbr")))
         .distinct(), lit(true))
-    var und = und0
     val (alive0, nAlive0) =
-      Checkpoints.scratchCount(und.select("node").distinct(), lit(true))
-    var alive = alive0
-    var nAlive = nAlive0
+      Checkpoints.scratchCount(und0.select("node").distinct(), lit(true))
     // mean degree = |und rows| div |V| (und holds one row per directed
     // distinct-neighbor incidence, so its count IS Σdeg)
     val k: Long = k0.map(_.toLong).getOrElse(
-      if (nAlive == 0L) 1L else nUnd / nAlive)
-    var retired: Seq[DataFrame] = Nil
-    val census = Seq.newBuilder[(Long, Long, Long, Long, Long)]
-    var r = 1
-    var fixed = false
-    while (r <= rounds && !fixed) {
-      val deg = und.groupBy("node").agg(count(lit(1)).as("deg"))
-      // the removal census (count + id-sum) rides the removed frame's
-      // checkpoint job via observe — no per-round census job
-      val (removed, crRow) = Checkpoints.scratchAgg(
-        alive.join(deg.filter(col("deg") >= k).select("node"),
-          Seq("node"), "left_anti"),
-        Seq(count(lit(1)).as("n"),
-          coalesce(sum(col("node")), lit(0L)).as("s")))
-      val (nRem, remSum) = crRow match {
-        case Some(cr) => (cr.getAs[Long]("n"), cr.getAs[Long]("s"))
-        case None =>
-          val cr = removed.agg(count(lit(1)),
-            coalesce(sum(col("node")), lit(0L))).head()
-          (cr.getLong(0), cr.getLong(1))
-      }
-      if (nRem == 0L) {
-        fixed = true
-        Checkpoints.rddOf(removed).foreach(_.unpersist(blocking = false))
-      } else {
-        nAlive -= nRem
-        census += ((r.toLong, k, nRem, remSum, nAlive))
-        val aliveNext = Checkpoints.scratch(
-          alive.join(removed, Seq("node"), "left_anti"))
-        val undNext = Checkpoints.scratch(
-          und.join(removed, Seq("node"), "left_anti")
-            .join(removed.select(col("node").as("nbr")),
-              Seq("nbr"), "left_anti")
-            .select("node", "nbr"))
-        retired.foreach(f =>
-          Checkpoints.rddOf(f).foreach(_.unpersist(blocking = false)))
-        retired = Seq(und, alive, removed)
-        und = undNext; alive = aliveNext
-        r += 1
-      }
+      if (nAlive0 == 0L) 1L else nUnd / nAlive0)
+    type Census = Vector[(Long, Long, Long, Long, Long)]
+    val init = Round((und0, alive0, nAlive0, Vector.empty: Census),
+      Seq(und0, alive0))
+    val (last, _) = Rounds.iterate(init, rounds) {
+      case (s @ (und, alive, nAlive, census), r) =>
+        val deg = und.groupBy("node").agg(count(lit(1)).as("deg"))
+        // the removal census (count + id-sum) rides the removed frame's
+        // checkpoint job via observe — no per-round census job
+        val (removed, cr) = Checkpoints.scratchAgg(
+          alive.join(deg.filter(col("deg") >= k).select("node"),
+            Seq("node"), "left_anti"),
+          Seq(count(lit(1)).as("n"),
+            coalesce(sum(col("node")), lit(0L)).as("s")))
+        val nRem = cr.getAs[Long]("n")
+        if (nRem == 0L) Round(s, Seq(removed), more = false)
+        else {
+          val aliveNext = Checkpoints.scratch(
+            alive.join(removed, Seq("node"), "left_anti"))
+          val undNext = Checkpoints.scratch(
+            und.join(removed, Seq("node"), "left_anti")
+              .join(removed.select(col("node").as("nbr")),
+                Seq("nbr"), "left_anti")
+              .select("node", "nbr"))
+          Round((undNext, aliveNext, nAlive - nRem,
+            census :+ ((r.toLong, k, nRem, cr.getAs[Long]("s"), nAlive - nRem))),
+            Seq(removed, aliveNext, undNext))
+        }
     }
+    Checkpoints.release(last.frames: _*)
+    val (_, _, nAlive, census) = last.state
     // identity tail: the fixed point reached before the budget — the
     // remaining rounds remove nothing by definition, so synthesize them
-    while (r <= rounds) {
-      census += ((r.toLong, k, 0L, 0L, nAlive)); r += 1
-    }
-    census.result()
+    (census ++ (census.size + 1 to rounds).map(r => (r.toLong, k, 0L, 0L, nAlive)))
       .toDF("round", "k", "n_removed", "removed_id_sum", "n_alive")
   }
 

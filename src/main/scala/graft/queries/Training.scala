@@ -3,7 +3,8 @@ package graft.queries
 import graft.Tables
 import graft.dedup.Dedup
 import graft.functions.{TextFunctions => T}
-import graft.operators.ConnectedComponents
+import graft.operators.{ConnectedComponents, Rounds}
+import graft.operators.Rounds.Round
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2504,8 +2505,9 @@ object Training {
   /** The MM iteration of [[q287]], generalized to SNAPSHOT the strength
     * frame after selected rounds (r14 VERDICT #6 — q296 prices the 3-round
     * approximation against a 5-round run the way q269 priced q252's
-    * recall). Returns (np, round → γ frame); snapshot frames stay
-    * scratch-persisted, intermediate rounds are retired as before. */
+    * recall). Returns (np, round → γ frame); a snapshot round lists no
+    * frames, so [[graft.operators.Rounds]] keeps its blocks, and every
+    * other round is retired. */
   private[graft] def bradleyTerryFit(pp: DataFrame, snapshots: Seq[Int])
       : (DataFrame, Map[Int, DataFrame]) = {
     val S = graft.operators.Checkpoints
@@ -2525,9 +2527,9 @@ object Training {
     val wins = np.select("i").distinct()
       .join(w.groupBy("i").agg(sum("w").as("wins")), Seq("i"), "left")
       .na.fill(0L, Seq("wins"))
-    var g = S.scratch(wins.withColumn("gamma", lit(1000000L)))
-    val snaps = scala.collection.mutable.Map.empty[Int, DataFrame]
-    (1 to snapshots.max).foreach { r =>
+    val g0 = S.scratch(wins.withColumn("gamma", lit(1000000L)))
+    val init = Round((g0, Map.empty[Int, DataFrame]), Seq(g0))
+    val (last, _) = Rounds.iterate(init, snapshots.max) { case ((g, snaps), r) =>
       // the ≤|items| strength frame is BROADCAST into the pair blocks (the
       // hits/labelPropagation regime argument: the item catalog is bounded
       // by construction; scratch frames carry no useful size stats, so the
@@ -2540,7 +2542,6 @@ object Training {
         .withColumn("t",
           expr("nij * 10000000000 div greatest(1, gamma + gj)"))
         .groupBy("i").agg(sum("t").as("den"))
-      val prev = g
       // the 10^12 ceiling applies to graw itself, not only to the
       // normalized gamma: with truncating division a large-γ round can
       // collapse den to 0 (every term nij·10^10 div (γi+γj) rounds down),
@@ -2561,24 +2562,16 @@ object Training {
           .select("i", "wins", "graw"),
         Seq(coalesce(sum(col("graw")), lit(0L)).as("s"),
           count(lit(1)).as("c")))
-      val meang: Long = mrow match {
-        case Some(row) => math.max(1L,
-          row.getAs[Long]("s") / math.max(1L, row.getAs[Long]("c")))
-        case None =>
-          val row = graw.agg(coalesce(sum(col("graw")), lit(0L)),
-            count(lit(1))).head()
-          math.max(1L, row.getLong(0) / math.max(1L, row.getLong(1)))
-      }
-      g = graw.withColumn("gamma",
+      val meang = math.max(1L,
+        mrow.getAs[Long]("s") / math.max(1L, mrow.getAs[Long]("c")))
+      val next = graw.withColumn("gamma",
           expr(s"least(1000000000000, graw * 1000000 div $meang)"))
         .select("i", "wins", "gamma")
-      // a snapshot round's frame must outlive the loop — retire only
-      // non-snapshot predecessors
-      if (!snaps.valuesIterator.exists(_ eq prev))
-        S.rddOf(prev).foreach(_.unpersist(blocking = false))
-      if (snapshots.contains(r)) snaps(r) = g
+      // a snapshot round's frame must outlive the loop: it lists no frames
+      if (snapshots.contains(r)) Round((next, snaps + (r -> next)))
+      else Round((next, snaps), Seq(graw))
     }
-    (np, snaps.toMap)
+    (np, last.state._2)
   }
 
   /** One MM round as oracle CTEs — shared by q287 (3 rounds) and q296

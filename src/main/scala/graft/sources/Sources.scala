@@ -52,7 +52,7 @@ object Sources {
       col("r").getField(CorruptCol),
       when(col("r").isNull || trim(col("value")) === "", col("value")))
       .as(CorruptCol)
-    parsed.select(fields :+ corrupt: _*)
+    parsed.select((fields :+ corrupt).toSeq: _*)
   }
 
   /** CSV with a `fieldNames.mkString(",")` header convention, explicit

@@ -255,7 +255,7 @@ class AnnSpec extends AnyFunSuite {
         val mag = dot * dot * 1000000L / (nu * qn)
         (id, if (dot >= 0) mag else -mag)
       }
-      .sortBy { case (id, s) => (-s, id) }.take(10).map(_._1)
+      .sortBy { case (id, s) => (-s, id) }.take(10).map(_._1).toSeq
   }
 
   test("portable IVF serve: exact duplicate of the query ranks first at score 1e6") {
@@ -305,7 +305,7 @@ class AnnSpec extends AnyFunSuite {
       var d = 0L; var i = 0
       while (i < u.length) { val x = u(i) - qv(i); d += x * x; i += 1 }
       (id, d)
-    }.sortBy { case (id, d) => (d, id) }.take(10).map(_._1)
+    }.sortBy { case (id, d) => (d, id) }.take(10).map(_._1).toSeq
   }
 
   test("portable PQ: recall vs the exact quantized-L2 ranking >= 0.7, distances exact") {

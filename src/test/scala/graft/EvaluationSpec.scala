@@ -63,7 +63,7 @@ class EvaluationSpec extends AnyFunSuite {
         r.getLong(5), r.getLong(6), r.getLong(7), r.getLong(8), r.getLong(9))
     val ev = graft.Tables.load(spark, sf, "events")
     assert(nA + nB ==
-      ev.select(countDistinct(col("user_id"))).head.getLong(0))
+      ev.select(countDistinct(col("user_id"))).head().getLong(0))
     assert(pA + pB == ev.filter(col("event_type") === "purchase").count())
     assert(mA == pA * 1000L / nA && mB == pB * 1000L / nB)
     assert(up == mB - mA)
@@ -592,7 +592,7 @@ class EvaluationSpec extends AnyFunSuite {
     assert(rows.exists(_._5 == 1L) && rows.exists(_._5 == 0L))
     // same equivalence classes as the l-diversity audit (q161 reports the
     // count; the two gates must audit the same partition)
-    val q161Row = graft.queries.Extensions.q161(spark, sf).head
+    val q161Row = graft.queries.Extensions.q161(spark, sf).head()
     assert(rows.length.toLong == q161Row.getLong(1),
       "t-closeness and l-diversity must see the same class set")
   }

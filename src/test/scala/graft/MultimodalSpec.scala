@@ -19,7 +19,7 @@ class MultimodalSpec extends AnyFunSuite {
   test("media table: opaque binary payload + typed metadata survive") {
     val m = media()
     assert(m.schema("payload").dataType.typeName == "binary")
-    val row = m.orderBy("media_id").head
+    val row = m.orderBy("media_id").head()
     assert(new String(row.getAs[Array[Byte]]("payload")) == "aaaa")
     assert(row.getAs[org.apache.spark.sql.Row]("meta").getAs[String]("lang") == "en")
   }
@@ -42,7 +42,7 @@ class MultimodalSpec extends AnyFunSuite {
       (3L, "", "en", "s1", 0L))              // empty: one all-zero row
       .toDF("doc_id", "text", "lang", "source", "n_chars")
     val ppm = Multimodal.ppmFromDocuments(docs)
-    val p1 = ppm.filter(col("media_id") === 1L).head.getAs[Array[Byte]]("payload")
+    val p1 = ppm.filter(col("media_id") === 1L).head().getAs[Array[Byte]]("payload")
     assert(new String(p1.take(11), "US-ASCII") == "P6\n4 1\n255\n")
     assert(p1.length == 11 + 12)
     val stats = Multimodal.decodePpm(ppm).orderBy("media_id").collect()
@@ -123,7 +123,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(new String(payload.drop(headerLen), "US-ASCII") == "ABCGHIMNOSTU")
     // the thumbnail is itself decodable by the shared parser
     val stats = Multimodal.decodePpm(
-      Multimodal.resizePpm(Multimodal.ppmFromDocuments(docs), 2, 2)).head
+      Multimodal.resizePpm(Multimodal.ppmFromDocuments(docs), 2, 2)).head()
     assert(stats.getInt(1) == 2 && stats.getInt(2) == 2)
     assert(stats.getLong(3) == "AGMS".map(_.toLong).sum) // sum_r
     // malformed payloads never survive the resize

@@ -119,7 +119,7 @@ class OperatorSemanticsSpec extends AnyFunSuite {
       Conform.renameAll(df, Map("id" -> "key", "name" -> "label")),
       Seq("label", "key"))
     assert(out.columns.toSeq == Seq("label", "key"))
-    assert(out.head.getString(0) == "a")
+    assert(out.head().getString(0) == "a")
   }
 
   test("P4 ExtendedPrice formula matches direct computation (100 samples)") {

@@ -20,12 +20,12 @@ class PipelineSpec extends AnyFunSuite {
     val first = p.auditFact()
     assert(first.rows == lineitemCount) // V1: inner join preserves all lineitem rows
     assert(first.nullKeys == 0)         // V2: every lookup resolved
-    val top1 = p.auditTop10.select("extended_price_cents").head.getLong(0)
+    val top1 = p.auditTop10.select("extended_price_cents").head().getLong(0)
 
     assert(p.runAll()) // S4 truncate-and-reload: second run identical
     val second = p.auditFact()
     assert(second.rows == first.rows && second.nullKeys == 0)
-    assert(p.auditTop10.select("extended_price_cents").head.getLong(0) == top1)
+    assert(p.auditTop10.select("extended_price_cents").head().getLong(0) == top1)
   }
 
   test("observed fact load: audit metrics collected during the write match the post-hoc audit") {

@@ -1,6 +1,8 @@
 package graft
 
 import graft.functions.{TextFunctions => T}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -423,6 +425,118 @@ class PropertySpec extends AnyFunSuite {
     }
     assert(ok.count() == 10L)
     ok.unpersist()
+    graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
+  }
+
+  test("scratch of a live scratch checkpoint mints no second checkpoint") {
+    import graft.operators.Checkpoints
+    val sc = spark.sparkContext
+    val once = Checkpoints.scratch(spark.range(10).toDF("v"))
+    val before = sc.getPersistentRDDs.keySet
+    val twice = Checkpoints.scratch(once)
+    assert(sc.getPersistentRDDs.keySet == before, "a second checkpoint RDD")
+    assert(Checkpoints.rddOf(twice).map(_.id) == Checkpoints.rddOf(once).map(_.id))
+    assert(twice.count() == 10L)
+    // a plan ON a checkpoint is still materialized
+    val derived = Checkpoints.scratch(once.select((col("v") * 2).as("v")))
+    assert(sc.getPersistentRDDs.size == before.size + 1)
+    assert(derived.collect().map(_.getLong(0)).sorted.toSeq == (0L until 20L by 2L))
+    Checkpoints.sweepScratch(sc, blocking = true)
+  }
+
+  /** Checkpointed block-store entries left behind by `kernel`, counted from
+    * a swept store. `SparkContext.unpersistRDD` drops an entry
+    * synchronously, so a round freed with `blocking = false` is already
+    * gone from the count. Every persisted RDD seen while the kernel runs
+    * is held strongly: otherwise a garbage collection lets the
+    * ContextCleaner free a round the kernel never released, and the leak
+    * would not show. */
+  private def checkpointsLeft(kernel: => DataFrame): Int = {
+    val sc = spark.sparkContext
+    def live = sc.getPersistentRDDs.values.count(_.isCheckpointed)
+    graft.operators.Checkpoints.sweepScratch(sc, blocking = true)
+    val before = live
+    val held = java.util.concurrent.ConcurrentHashMap.newKeySet[AnyRef]()
+    val pin = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        sc.getPersistentRDDs.values.foreach(held.add)
+    }
+    sc.addSparkListener(pin)
+    try assert(kernel.collect().nonEmpty)
+    finally sc.removeSparkListener(pin)
+    live - before
+  }
+
+  /** A random weighted digraph on 12 vertices: no self-loops, one row per
+    * (src, dst). */
+  private def randomWeighted(seed: Int): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    (0 until 30).map(_ => (rnd.nextInt(12).toLong, rnd.nextInt(12).toLong,
+      (1 + rnd.nextInt(5)).toLong))
+      .filter(e => e._1 != e._2).groupBy(e => (e._1, e._2))
+      .map { case ((s, d), g) => (s, d, g.map(_._3).sum) }.toSeq
+      .toDF("src", "dst", "wt")
+  }
+
+  /** Same live-checkpoint count after 2 rounds and after 6: every round
+    * but the last was freed. */
+  private def assertRoundsRetired(kernel: Int => DataFrame): Unit = {
+    val at2 = checkpointsLeft(kernel(2))
+    val at6 = checkpointsLeft(kernel(6))
+    assert(at2 == at6, s"live checkpoints: $at2 after 2 rounds, $at6 after 6")
+  }
+
+  test("pageRank frees the blocks of earlier rounds") {
+    val edges = randomWeighted(21)
+    assertRoundsRetired(r => graft.queries.Graph.pageRank(edges, r))
+  }
+
+  test("hits frees the blocks of earlier rounds") {
+    val edges = randomWeighted(22)
+    assertRoundsRetired(r => graft.queries.Graph.hits(edges, r))
+  }
+
+  test("labelPropagation frees the blocks of earlier rounds") {
+    val edges = randomWeighted(23)
+    assertRoundsRetired(r => graft.queries.Graph.labelPropagation(edges, r))
+  }
+
+  test("bfsHops frees the blocks of earlier rounds") {
+    // a path 0-1-…-8 keeps nodes 1..6 at distances 1..6, so all 6 rounds
+    // settle someone; random chords hang off its far end
+    val rnd = new scala.util.Random(24)
+    val chords = (0 until 10).map(_ => (6 + rnd.nextInt(8), 6 + rnd.nextInt(8)))
+    val edges = ((0 until 8).map(i => (i, i + 1)) ++ chords)
+      .collect { case (a, b) if a != b =>
+        (math.min(a, b).toLong, math.max(a, b).toLong) }
+      .distinct.toDF("a", "b")
+    assertRoundsRetired(r => graft.queries.Graph.bfsHops(edges, r))
+  }
+
+  test("ConnectedComponents.run frees the blocks of earlier rounds") {
+    import graft.operators.ConnectedComponents
+    // a random graph on a star converges in exactly 2 rounds; a 32-edge
+    // path needs exactly 6, so each run uses its whole budget
+    val rnd = new scala.util.Random(25)
+    val star = ((1 until 12).map(i => (0L, i.toLong)) ++
+      (0 until 8).map(_ => (1L + rnd.nextInt(11), 1L + rnd.nextInt(11))))
+      .toDF("src", "dst")
+    val path = (0L until 32L).map(i => (i, i + 1)).toDF("src", "dst")
+    val at2 = checkpointsLeft(ConnectedComponents.run(
+      spark.range(12).toDF("id"), star, maxIters = 2))
+    val at6 = checkpointsLeft(ConnectedComponents.run(
+      spark.range(33).toDF("id"), path, maxIters = 6))
+    assert(at2 == at6, s"live checkpoints: $at2 after 2 rounds, $at6 after 6")
+  }
+
+  test("bradleyTerryFit keeps its round-3 snapshot readable past round 5") {
+    val pairs = Seq((10L, 20L), (20L, 30L), (30L, 40L), (40L, 10L))
+      .flatMap { case (a, b) => Seq.fill(3)((a, b)) :+ ((b, a)) }
+      .toDF("chosen", "rejected")
+    val (_, snaps) = graft.queries.Training.bradleyTerryFit(pairs, Seq(3, 5))
+    assert(snaps.keySet == Set(3, 5))
+    assert(snaps(3).collect().map(_.getLong(0)).sorted.toSeq ==
+      Seq(10L, 20L, 30L, 40L))
     graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
   }
 

@@ -183,7 +183,7 @@ class RetrievalSpec extends AnyFunSuite {
         case (acc, iv) => acc :+ iv
       }
     val sess = evs.groupBy(_._1).toSeq.flatMap { case (u, xs) =>
-      merge(xs.map(x => (x._2, x._2 + 300000L))).map { case (s, e) => (u, s, e) }
+      merge(xs.toSeq.map(x => (x._2, x._2 + 300000L))).map { case (s, e) => (u, s, e) }
     }
     // per-type high-activity windows: hours at >= 1.5x the type's mean
     // events-per-active-hour, adjacent merged
@@ -407,7 +407,7 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("q229 retrieval diversity replays from the scored top-50") {
-    val r = Retrieval.q229(spark, sf).head
+    val r = Retrieval.q229(spark, sf).head()
     val (k, ns, top, hhi) = (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3))
     assert(k == 50L, "the audit list is the lexical top-50")
@@ -499,7 +499,7 @@ class RetrievalSpec extends AnyFunSuite {
   }
 
   test("q218 rerank agreement: triangular pairs, tau identity and bounds") {
-    val r = Retrieval.q218(spark, sf).head
+    val r = Retrieval.q218(spark, sf).head()
     val (n, c, d, tau) = (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
     assert(c + d == n, "every pair is concordant xor discordant")
     // n is triangular: k(k-1)/2 for the candidate count k, and most of the

@@ -362,7 +362,7 @@ class StreamingSpec extends AnyFunSuite {
     // in state, everything else — including trailing sessions of users who
     // never returned — must have been flushed by the timeout
     val batchEvents = Tables.load(spark, sf, "events")
-    val wmMs = batchEvents.agg(max(unix_millis(col("ts")))).head.getLong(0)
+    val wmMs = batchEvents.agg(max(unix_millis(col("ts")))).head().getLong(0)
     val all = EventStream.sessionize(batchEvents, flushOpen = true)
       .collect().map(s => (s.user_id, s.start_ms, s.end_ms, s.n_events))
     val expected = all.filter { case (_, _, end, _) => end + gapMs < wmMs }.toSet

@@ -75,7 +75,7 @@ class TextVectorSpec extends AnyFunSuite {
       T.occurrences(col("text"), "the").as("the_n"),
       T.occurrences(col("text"), "missing").as("m_n"),
       size(T.wordShingles(col("text"), 3)).as("sh3"),
-      size(T.wordShingles(col("text"), 99)).as("sh99")).head
+      size(T.wordShingles(col("text"), 99)).as("sh99")).head()
     assert(row.getAs[Int]("n") == 8)
     assert(row.getAs[Long]("the_n") == 3L)
     assert(row.getAs[Long]("m_n") == 0L)
@@ -207,13 +207,13 @@ class TextVectorSpec extends AnyFunSuite {
   test("cosine_sim mixed float/double sides (query-literal pattern)") {
     val df = Seq(Seq(1f, 2f, 3f)).toDF("x")
     val qLit = typedlit(Seq(1.0, 2.0, 3.0))
-    val out = df.select(V.cosine(col("x"), qLit)).head.getDouble(0)
+    val out = df.select(V.cosine(col("x"), qLit)).head().getDouble(0)
     assert(math.abs(out - 1.0) < 1e-12)
   }
 
   test("cosine_sim is registered on the SQL surface") {
     val n = spark.sql(
-      "SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS c").head.getDouble(0)
+      "SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS c").head().getDouble(0)
     assert(n == 1.0)
   }
 

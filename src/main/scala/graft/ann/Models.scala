@@ -70,17 +70,29 @@ object Models {
     * ConcurrentHashMap and `compute` forbids reentrant updates
     * (IllegalStateException("Recursive update"), and only once the map is
     * populated enough to collide bins — a latent failure, not a loud one).
+    * A per-thread guard makes it loud: any call made while this thread
+    * runs a `train` throws an IllegalStateException naming both keys.
     * Resolve nested models BEFORE entering the outer gate, as
     * [[graft.queries.Semantic.memberFrame]] does. */
   def cachedLatest[T <: AnyRef](baseKey: String, stamp: String,
-      onEvict: T => Unit = (_: T) => ())(train: => T): T =
+      onEvict: T => Unit = (_: T) => ())(train: => T): T = {
+    val outer = building.get
+    if (outer != null)
+      throw new IllegalStateException(s"Models.cachedLatest re-entered: " +
+        s"'$baseKey' requested while building '$outer'; resolve it before " +
+        "the outer build")
     latest.compute(baseKey, (_, prev) =>
       if (prev != null && prev._1 == stamp) prev
       else {
         if (prev != null) onEvict(prev._2.asInstanceOf[T])
-        (stamp, train)
+        building.set(baseKey)
+        try (stamp, train) finally building.remove()
       }
     )._2.asInstanceOf[T]
+  }
+
+  /** The key whose `train` this thread is running, or null. */
+  private val building = new ThreadLocal[String]
 }
 
 /** Build-once path scheme shared by the persisted index families

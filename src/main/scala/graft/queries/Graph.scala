@@ -3,17 +3,21 @@ package graft.queries
 import graft.Tables
 import graft.operators.{Checkpoints, Rounds}
 import graft.operators.Rounds.Round
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative graph analytics over derived relational graphs. The engine's
   * second fixed-point operator family after connected components
-  * (`operators/ConnectedComponents`): synchronous rounds of
-  * join + aggregate, no driver-side graph state, all arithmetic exact
-  * integer so every round — and therefore the fixed iteration count — is
-  * DuckDB-oracle hash-checkable.
+  * (`operators/ConnectedComponents`): synchronous rounds, all arithmetic
+  * exact integer so every round — and therefore the fixed iteration count
+  * — is DuckDB-oracle hash-checkable. Every kernel but one keeps its graph
+  * state in Spark (rounds of join + aggregate) and so runs at any corpus
+  * size. [[hits]] is the exception: it declares a bounded node catalog and
+  * holds its two |V|-long score vectors on the driver, one Spark job per
+  * half-round.
   */
 object Graph {
 
@@ -613,84 +617,97 @@ object Graph {
   /** Weighted HITS (Kleinberg, JACM 1999): the mutual-reinforcement
     * recurrence — auth(v) = Σ_{u→v} wt·hub(u), hub(u) = Σ_{u→v} wt·auth(v)
     * — in exact integer arithmetic, renormalized each half-round by the
-    * frame MAX (x := x·1e6 div max, GREATEST(max,1) guards the all-zero
-    * frame) so scores live in [0, 1e6] and the recurrence can never
-    * overflow int64 regardless of round count. The q124 fixed-point
-    * engineering carries over, with one structural difference: HITS runs
-    * TWO synchronized propagations per round (in-aggregate then
-    * out-aggregate) where PageRank runs one, so its floor is ≈ 2× q124's
-    * per-round cost — measured exactly that across the scale fixtures.
-    * The ≤|V| score frame is broadcast into the checkpointed edge blocks
-    * each half-round (the node table is catalog-bounded; a graph whose
-    * node table outgrows executor memory needs the co-partitioned variant,
-    * a different declared regime), and each round's raw aggregates are
-    * eagerly checkpointed and retired by [[Rounds]]. The final round's
-    * frames (plus eBase and nodes) back the returned lazy frame, so they
-    * live until the between-query sweep (`Checkpoints.sweepScratch`). */
+    * vector MAX (x := x·1e6 div max, GREATEST(max,1) guards the all-zero
+    * vector) so scores live in [0, 1e6]. Every product and sum is
+    * `Math.multiplyExact` / `addExact`: an edge weight large enough to
+    * overflow int64 fails the query as ANSI `*` / `sum` do, never wraps.
+    * Hubs start at 1e6 for every node; a node with no in-edges has a = 0,
+    * one with no out-edges h = 0. `src`, `dst` and `wt` are longs, the ids
+    * non-null (a null weight adds nothing, as in SUM).
+    *
+    * Regime: BOUNDED CATALOG. The node set is collected to the driver and
+    * both score vectors (|V| longs each) live there; each half-round
+    * broadcasts the current vector and runs ONE Spark job over the
+    * checkpointed edge blocks that folds wt·score[from] into a per-partition
+    * |V|-slot partial, merged on the driver. A half-round thus costs one
+    * job boundary; a SQL half-round pays its broadcast, shuffle and
+    * checkpoint as separate jobs, and leaving it lazy would not merge
+    * them, since under AQE each exchange is its own query-stage job. A
+    * graph whose node table outgrows driver or executor memory needs the
+    * co-partitioned join variant, a different declared regime; PageRank
+    * ([[pageRankSeeded]]) runs that regime.
+    *
+    * Returns a local relation (`node`, `a`, `h`), one row per node, built
+    * from the final vectors: no checkpoint or broadcast outlives the call. */
   def hits(rawEdges: DataFrame, rounds: Int): DataFrame = {
-    // the edge DISCOVERY plan (a corpus-wide window + groupBy upstream) is
-    // materialized exactly once — a first cut hung three consumers off the
-    // raw plan and re-ran the discovery three times (two-thirds of the
-    // measured ×10 wall). MEASURED dead end, recorded so nobody retries
-    // it: pre-partitioned per-aggregation-key edge copies (to plan
-    // zero-exchange half-rounds) bench WORSE at every fixture scale
-    // (×64: 57 s vs 23 s) — the checkpoint's partitioning metadata does
-    // not survive to the aggregate planner, so the copies bought nothing
-    // and cost two extra |E|-row checkpoint writes.
-    val eBase = Checkpoints.scratch(rawEdges)
-    val nodes = Checkpoints.scratch(
-      eBase.select(col("src").as("node"))
-        .union(eBase.select(col("dst").as("node"))).distinct())
-    // score frames stay SPARSE through the rounds: a node absent from the
-    // frame has score 0, contributes wt·0 = 0 to the next half-round, and
-    // can never win the renormalizing MAX — so the dense nodes join (and
-    // its shuffle) is paid ONCE at the end, not per half-round. Each
-    // half-round materializes exactly ONE frame (the raw aggregate); the
-    // renormalized projection stays lazy over those checkpointed blocks,
-    // so its consumers re-run only a 1-row max, not the aggregate. A first
-    // cut materialized the normalized frame instead and re-executed every
-    // aggregate twice (once under the max, once under the checkpoint) —
-    // measured 9.0 s at ×10 vs this shape's, on the same graph where the
-    // 5-round q124 costs 2.2 s.
-    // the renormalizing MAX rides each half-round's checkpoint job as an
-    // observe accumulator (Checkpoints.scratchAgg) and enters the next
-    // plan as a LITERAL — the q30 parameter-fetch pattern. The old shape
-    // paid a 1-row max job + a broadcast crossJoin per half-round (6 of
-    // each per q267 execution) for the same number.
-    def rawMax(df: DataFrame): (DataFrame, Long) =
-      Checkpoints.scratchAgg(df,
-        Seq(greatest(coalesce(max(col("v")), lit(1L)), lit(1L)).as("mx"))) match {
-        case (out, row) => (out, row.getLong(0))
-      }
-    def renorm(raw: DataFrame, mx: Long, out: String): DataFrame =
-      raw.select(col("node"), expr(s"v * 1000000 div $mx").as(out))
-    val init = Round[(DataFrame, DataFrame)](
-      (null, nodes.withColumn("h", lit(1000000L))))
-    val (last, _) = Rounds.iterate(init, rounds) { case ((_, hub), _) =>
-      // the ≤|V| score frame is BROADCAST into the edge blocks: scratch
-      // frames carry no useful size stats, so an unhinted join planned as
-      // a sort-merge that re-sorted all |E| edges EVERY half-round
-      // (measured ~1–2 s per half at ×10, the whole query's cost). The
-      // score frame is node-catalog-bounded — the one frame in this
-      // recurrence that is broadcastable by construction; a graph whose
-      // NODE table outgrows executor memory needs the co-partitioned
-      // variant instead, and that is a different declared regime.
-      val (aRaw, aMx) = rawMax(
-        eBase.join(broadcast(hub.select(col("node").as("src"), col("h"))),
-            Seq("src"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(expr("wt * h")).as("v")))
-      val auth = renorm(aRaw, aMx, "a")
-      val (hRaw, hMx) = rawMax(
-        eBase.join(broadcast(
-            auth.select(col("node").as("dst"), col("a"))), Seq("dst"))
-          .groupBy(col("src").as("node"))
-          .agg(sum(expr("wt * a")).as("v")))
-      Round((auth, renorm(hRaw, hMx, "h")), Seq(aRaw, hRaw))
+    require(rounds >= 1, s"hits needs at least one round, got $rounds")
+    val Seq(si, di, wi) = Seq("src", "dst", "wt").map { c =>
+      val t = rawEdges.schema(c).dataType
+      require(t == LongType, s"hits: edge column $c must be a long, got $t")
+      rawEdges.schema.fieldIndex(c)
     }
-    val (auth, hub) = last.state
-    nodes.join(auth, Seq("node"), "left").join(hub, Seq("node"), "left")
-      .na.fill(0L, Seq("a", "h"))
+    // the edge DISCOVERY plan (a corpus-wide window + groupBy upstream) is
+    // materialized exactly once and every half-round reads its blocks.
+    // The frame itself is checkpointed, never a projection of it: for a
+    // SharedFrames registry entry the registry's own Dataset reuses its
+    // executed plan (one job), where a projection re-plans the discovery
+    // (measured at sf0.001: three more jobs per warm q267 execution).
+    val eBase = Checkpoints.scratch(rawEdges)
+    val spark = rawEdges.sparkSession
+    val sc = spark.sparkContext
+    try {
+      val edges = Checkpoints.rddOf(eBase).get
+      // the node catalog, sorted: a node's vector slot is its index
+      val ids = sc.runJob(edges, (it: Iterator[InternalRow]) => {
+        val b = new scala.collection.mutable.ArrayBuilder.ofLong
+        it.foreach { r =>
+          if (r.isNullAt(si) || r.isNullAt(di))
+            throw new IllegalArgumentException("hits: null src or dst")
+          b += r.getLong(si); b += r.getLong(di)
+        }
+        b.result().distinct
+      }).flatten.distinct.sorted
+      val idsBc = sc.broadcast(ids)
+      // one half-round: raw(to) = Σ wt·score(from), then renormalize
+      def half(score: Array[Long], from: Int, to: Int): Array[Long] = {
+        val scoreBc = sc.broadcast(score)
+        val raw = new Array[Long](ids.length)
+        try sc.runJob(edges, (it: Iterator[InternalRow]) => {
+            val slots = idsBc.value
+            val s = scoreBc.value
+            val part = new Array[Long](slots.length)
+            it.foreach { r =>
+              if (!r.isNullAt(wi)) {
+                val t = java.util.Arrays.binarySearch(slots, r.getLong(to))
+                val f = java.util.Arrays.binarySearch(slots, r.getLong(from))
+                part(t) = Math.addExact(part(t),
+                  Math.multiplyExact(r.getLong(wi), s(f)))
+              }
+            }
+            part
+          }, (_: Int, part: Array[Long]) =>
+            for (i <- raw.indices) raw(i) = Math.addExact(raw(i), part(i)))
+        finally scoreBc.destroy()
+        val mx = raw.foldLeft(1L)(math.max)
+        raw.map(v => Math.multiplyExact(v, 1000000L) / mx)
+      }
+      val (auth, hub) =
+        try (1 to rounds).foldLeft(
+            (Array.empty[Long], Array.fill(ids.length)(1000000L))) {
+          case ((_, h), _) =>
+            val a = half(h, si, di)
+            (a, half(a, di, si))
+        }
+        finally idsBc.destroy()
+      spark.createDataFrame(
+        java.util.Arrays.asList(
+          ids.indices.map(i => Row(ids(i), auth(i), hub(i))): _*),
+        StructType(Seq("node", "a", "h")
+          .map(StructField(_, LongType, nullable = false))))
+    } finally {
+      // a live scratch frame passed in comes back as eBase: the caller's to free
+      if (eBase ne rawEdges) Checkpoints.release(eBase)
+    }
   }
 
   /** q267 HITS hubs & authorities (new r13) — the second classic link-
@@ -701,7 +718,8 @@ object Graph {
     * single score conflates, and the reason HITS complements q124 in a
     * catalog/crawl ranking stack. 3 unrolled rounds (each = one weighted
     * in-aggregate, one MAX renormalization, one weighted out-aggregate,
-    * one renormalization — all exact integers), top-20 by authority. The
+    * one renormalization — all exact integers), top-20 by authority: six
+    * Spark jobs over the checkpointed edges, one per half-round. The
     * oracle unrolls the identical 12 CTE steps. */
   def q267(spark: SparkSession, dir: String): DataFrame =
     hits(transitionEdges(spark, dir), rounds = 3)
@@ -772,9 +790,10 @@ object Graph {
     * synchronous update can 2-cycle — a fixed round count reads a
     * snapshot, not a fixed point, and both engines read the SAME snapshot.
     *
-    * Scale shape (the [[hits]] engineering): the undirected edge frame is
-    * checkpointed ONCE; each round is one broadcast of the ≤|V| label
-    * frame into the edge blocks, one (node, lbl) map-combined aggregate,
+    * Scale shape (bounded catalog, the regime [[hits]] also declares): the
+    * undirected edge frame is checkpointed ONCE; each round is one
+    * broadcast of the ≤|V| label frame into the edge blocks, one
+    * (node, lbl) map-combined aggregate,
     * and one argmax — Θ(rounds·|E|). Honest shuffle bound (r14 SCALING
     * measurement): the vote aggregate is keyed by (node, incident label),
     * whose distinct cardinality is bounded by 2|E|, NOT |V| — an LPA

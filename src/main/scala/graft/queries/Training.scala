@@ -2550,7 +2550,7 @@ object Training {
       //
       // mean renormalization rides the round's checkpoint job as an
       // observe accumulator and enters the γ projection as a LITERAL (the
-      // q267 HITS discipline, r17): the old `over (partition by 1)`
+      // discipline q267 HITS used in r17): the old `over (partition by 1)`
       // windows forced an exchange-to-one-partition + two window passes
       // per round for two scalars. γ stays a lazy projection over the
       // checkpointed raw blocks, so consumers re-run only the projection.

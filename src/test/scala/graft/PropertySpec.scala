@@ -660,6 +660,138 @@ class PropertySpec extends AnyFunSuite {
     assert(got == expected, s"blocked pairs $got != brute-force $expected")
   }
 
+  /** HITS replayed on the driver: dense maps, same init / renorm / integer
+    * floor as the kernel. node -> (a, h) for every edge endpoint. */
+  private def hitsReplay(es: Seq[(Long, Long, Long)],
+      rounds: Int): Map[Long, (Long, Long)] = {
+    val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    var hub = nodes.map(_ -> 1000000L).toMap
+    var auth = Map.empty[Long, Long]
+    for (_ <- 1 to rounds) {
+      val aRaw = nodes.map(v => v ->
+        es.filter(_._2 == v).map(e => e._3 * hub(e._1)).sum).toMap
+      val am = aRaw.values.foldLeft(1L)(math.max)
+      auth = aRaw.map { case (k, v) => k -> v * 1000000L / am }
+      val hRaw = nodes.map(v => v ->
+        es.filter(_._1 == v).map(e => e._3 * auth(e._2)).sum).toMap
+      val hm = hRaw.values.foldLeft(1L)(math.max)
+      hub = hRaw.map { case (k, v) => k -> v * 1000000L / hm }
+    }
+    nodes.map(v => v -> (auth(v), hub(v))).toMap
+  }
+
+  /** The smoke fixture the q267 and registry specs read. */
+  private val smokeSf = "/root/testdata/sf0.001"
+
+  /** `es` as an edge frame spread over `parts` partitions. */
+  private def edgeFrame(es: Seq[(Long, Long, Long)], parts: Int): DataFrame =
+    spark.sparkContext.parallelize(es, parts).toDF("src", "dst", "wt")
+
+  test("HITS == driver replay for rounds 1-6, merged partitions, empty input, one-sided nodes") {
+    def hitsOf(es: Seq[(Long, Long, Long)], rounds: Int): Map[Long, (Long, Long)] = {
+      val edges = edgeFrame(es, parts = 4)
+      assert(edges.rdd.getNumPartitions == 4)
+      try queries.Graph.hits(edges, rounds).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      finally graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
+    }
+    val rnd = new scala.util.Random(17)
+    val random = (0 until 40).map(_ => (rnd.nextInt(14).toLong,
+        rnd.nextInt(14).toLong, (1 + rnd.nextInt(5)).toLong))
+      .filter(e => e._1 != e._2).groupBy(e => (e._1, e._2))
+      .map { case ((s, d), g) => (s, d, g.map(_._3).sum) }.toSeq.sorted
+    for (rounds <- 1 to 6)
+      assert(hitsOf(random, rounds) == hitsReplay(random, rounds),
+        s"random graph, $rounds rounds")
+    // edges only from a lower to a higher id: node 0 has no in-edges and
+    // node 9 no out-edges
+    val dag = ((0L until 9L).map(i => (i, i + 1, 1L + i % 3)) ++
+      Seq((0L, 5L, 4L), (2L, 9L, 2L), (3L, 7L, 1L), (1L, 8L, 3L))).sorted
+    val got = hitsOf(dag, rounds = 3)
+    assert(got == hitsReplay(dag, rounds = 3))
+    assert(got(0L)._1 == 0L && got(0L)._2 > 0L, s"source node: ${got(0L)}")
+    assert(got(9L)._2 == 0L && got(9L)._1 > 0L, s"sink node: ${got(9L)}")
+    assert(hitsOf(Seq.empty, rounds = 3).isEmpty)
+  }
+
+  test("hits fails on an int64 overflow instead of wrapping") {
+    // wt·1e6 overflows in the first half-round's product
+    val product = Seq((1L, 2L, Long.MaxValue / 1000L))
+    // each product fits, their sum at node 3 does not: in one partition,
+    // and split so that only the merge of the partials overflows
+    val sum = Seq((1L, 3L, 5000000000000L), (2L, 3L, 5000000000000L))
+    for ((es, parts) <- Seq(product -> 1, sum -> 1, sum -> 2)) {
+      val err = intercept[Exception](
+        queries.Graph.hits(edgeFrame(es, parts), rounds = 1).collect())
+      val chain = Iterator.iterate[Throwable](err)(_.getCause)
+        .takeWhile(_ != null).toSeq
+      assert(chain.exists(e => e.isInstanceOf[ArithmeticException] ||
+        String.valueOf(e.getMessage).contains("overflow")),
+        s"$es in $parts partitions: $err")
+      graft.operators.Checkpoints.sweepScratch(spark.sparkContext, blocking = true)
+    }
+  }
+
+  test("hits leaves no broadcast and no scratch checkpoint behind") {
+    // a task binary (the closure each stage ships) is freed only by the
+    // ContextCleaner at garbage collection; any other new broadcast is
+    // the kernel's own
+    val before = org.apache.spark.BroadcastBlocks.live().keySet
+    assert(checkpointsLeft(queries.Graph.hits(randomWeighted(26), 3)) == 0)
+    // Broadcast.destroy() frees the blocks asynchronously
+    def left = org.apache.spark.BroadcastBlocks.live()
+      .collect { case (id, false) if !before(id) => id }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (left.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(left.isEmpty, s"broadcasts left: $left")
+  }
+
+  test("q267 runs at most 12 Spark jobs on a warm execution") {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val sc = spark.sparkContext
+    val q267 = SparkEntry.queries("q267_hits")
+    q267(spark, smokeSf).collect()
+    Engine.resetBetweenQueries(spark)
+    // listener events arrive asynchronously but in order: a sentinel job
+    // run after the query marks where its jobs end
+    val sentinel = "graft.property-spec.sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(sentinel) != null))
+          seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      assert(q267(spark, smokeSf).collect().nonEmpty)
+      sc.setLocalProperty(sentinel, "1")
+      try spark.range(1).collect() finally sc.setLocalProperty(sentinel, null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    assert(jobs.get <= 12, s"${jobs.get} jobs, builder plus action")
+  }
+
+  test("a sharedFrame built inside another's build fails naming both keys") {
+    import graft.queries.SharedFrames.sharedFrame
+    val err = intercept[IllegalStateException] {
+      sharedFrame(spark, smokeSf, "lineitem", "reentry-outer") {
+        sharedFrame(spark, smokeSf, "lineitem", "reentry-inner")(spark.range(3).toDF("v"))
+      }
+    }
+    assert(err.getMessage.contains("reentry-outer") &&
+      err.getMessage.contains("reentry-inner"), err.getMessage)
+    // the refused build leaves no entry and no guard behind: resolved
+    // first, the inner frame feeds the outer build
+    val inner = sharedFrame(spark, smokeSf, "lineitem", "reentry-inner")(
+      spark.range(3).toDF("v"))
+    val outer = sharedFrame(spark, smokeSf, "lineitem", "reentry-outer")(
+      inner.select((col("v") + 1).as("v")))
+    assert(outer.collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
+    outer.unpersist(); inner.unpersist()
+  }
+
   test("HITS == driver-side replay of the renormalized recurrence, for random graphs") {
     val rnd = new scala.util.Random(11)
     for (trial <- 0 until 3) {
@@ -671,29 +803,12 @@ class PropertySpec extends AnyFunSuite {
         .groupBy(e => (e._1, e._2))
         .map { case ((s, d), g) => (s, d, g.map(_._3).sum) }.toSeq
       if (es.nonEmpty) {
-        val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-        // driver replay: dense maps, same init / renorm / integer floor
-        var hub = nodes.map(_ -> 1000000L).toMap
-        var auth = Map.empty[Long, Long]
-        for (_ <- 1 to 3) {
-          val aRaw = nodes.map(v => v ->
-            es.filter(_._2 == v).map(e => e._3 * hub(e._1)).sum).toMap
-          val am = math.max(aRaw.values.max, 1L)
-          auth = aRaw.map { case (k, v) => k -> v * 1000000L / am }
-          val hRaw = nodes.map(v => v ->
-            es.filter(_._1 == v).map(e => e._3 * auth(e._2)).sum).toMap
-          val hm = math.max(hRaw.values.max, 1L)
-          hub = hRaw.map { case (k, v) => k -> v * 1000000L / hm }
-        }
         val got = queries.Graph.hits(
             es.toDF("src", "dst", "wt"), rounds = 3)
           .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))
           .toMap
-        val want = nodes.map(v => v -> (auth(v), hub(v))).toMap
+        val want = hitsReplay(es, rounds = 3)
         assert(got == want, s"trial $trial: $got != $want")
-        // library-primitive usage outside the bench sweep: reap the final
-        // round's checkpoint blocks per trial (hits() docstring contract),
-        // or the trial loop accumulates dead localCheckpoint blocks
         graft.operators.Checkpoints.sweepScratch(spark.sparkContext)
       }
     }

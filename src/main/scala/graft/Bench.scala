@@ -24,7 +24,8 @@ object Bench {
     // subtrees / JIT re-warms / host-load spikes add seconds), so min is the
     // right estimator, and min-of-3 rides out single-run load spikes that
     // min-of-2 recorded verbatim in rounds 2-3.
-    val failed = scala.collection.mutable.ArrayBuffer[String]()
+    // failed query -> (exception class, first line of its message)
+    val failed = scala.collection.mutable.LinkedHashMap[String, (String, String)]()
     // Opt-in subset (SPARK_GRAFT_BENCH_ONLY="q138,q136_triangles,..."):
     // time only the queries whose name starts with one of the
     // comma-separated prefixes — the scale-validation loop (several
@@ -76,7 +77,13 @@ object Bench {
       // their [min, median] digest
       def once(): Option[(Double, Double)] = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => return None }
+        try { fn(spark, sfDir).count() } catch { case e: Throwable =>
+          val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+            .getOrElse("")
+          failed(name) = (e.getClass.getName, msg)
+          System.err.println(s"[bench] $name failed: ${e.getClass.getName}: $msg")
+          return None
+        }
         Some(((System.nanoTime() - t0) / 1e9, loadavg()))
       }
       val reps = for (_ <- once(); a <- once(); b <- once(); c <- once())
@@ -86,7 +93,6 @@ object Bench {
         (s.head, s(1)) // (min, median) — min estimates plan cost, median
                        // exposes host noise without a judge-side probe
       }
-      if (t.isEmpty) failed += name
       Engine.resetBetweenQueries(spark)
       // host load sampled right after this query's reps: lets a reader
       // normalize each [min, median] for CONTEMPORANEOUS host contention
@@ -180,7 +186,10 @@ object Bench {
     // Failed queries are reported as null and in `failed` — never folded
     // into the total, which would silently shrink (improve) it.
     val total = results.flatMap(_._2.map(_._1)).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.keys.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val reasonsJson = failed.map { case (k, (cls, msg)) =>
+      s"""${jsonStr(k)}:{"class":${jsonStr(cls)},"message":${jsonStr(msg)}}"""
+    }.mkString("{", ",", "}")
     val loadAfter = loadavg()
     // Complete per-query [min, median] record — median − min is host noise,
     // min is plan cost — goes to a repo file; the stdout contract line below
@@ -211,7 +220,7 @@ object Bench {
     }.mkString("[", ",", "]")
     try {
       val w = new java.io.PrintWriter(detailPath)
-      try w.println(s"""{"unit":"sec","min_median":$detail,"reps_sec_load":$repsJson,"load1m_after_query":$loadTrace,"high_load_suspect":$highLoad,"load1m_suspect_threshold":$loadThreshold,"failed":$failedJson,"load1m":[${fmt(loadBefore)},${fmt(loadAfter)}],"sf":"$sfDir"$subsetJson$provJson$soloJson}""")
+      try w.println(s"""{"unit":"sec","min_median":$detail,"reps_sec_load":$repsJson,"load1m_after_query":$loadTrace,"high_load_suspect":$highLoad,"load1m_suspect_threshold":$loadThreshold,"failed":$failedJson,"failure_reasons":$reasonsJson,"load1m":[${fmt(loadBefore)},${fmt(loadAfter)}],"sf":"$sfDir"$subsetJson$provJson$soloJson}""")
       finally w.close()
     } catch { case _: Throwable => () } // detail file is best-effort
     // The driver reads this line from a bounded tail buffer (~1.8 KB,
@@ -235,7 +244,7 @@ object Bench {
     val lineBudget = 1250
     var used = 0
     val failedOut = scala.collection.mutable.ArrayBuffer[String]()
-    failed.sorted.foreach { k =>
+    failed.keys.toSeq.sorted.foreach { k =>
       val e = "\"" + qkey(k) + "\""
       if (used + e.length + 1 <= lineBudget) { failedOut += e; used += e.length + 1 }
     }

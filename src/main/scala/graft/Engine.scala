@@ -6,9 +6,9 @@ import org.apache.spark.sql.SparkSession
   * entry point (Verify, Bench, tests, pipelines) executes with the same
   * engine characteristics:
   *
-  *  - AQE on: runtime coalescing of shuffle partitions, skew-join splitting,
-  *    and dynamic broadcast conversion — the knobs that keep the same plan
-  *    viable from sf0.001 up to cluster scale.
+  *  - AQE, on by Spark default: runtime coalescing of shuffle partitions,
+  *    skew-join splitting, and dynamic broadcast conversion — what keeps
+  *    the same plan viable from sf0.001 up to cluster scale.
   *  - shuffle.partitions sized to the local core count (the prompt's
   *    local[32]); on a real cluster this is AQE's initial partition number,
   *    not a hard setting.
@@ -26,9 +26,6 @@ object Engine {
       .master(s"local[$cpus]")
       .appName(appName)
       .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       // Let AQE re-optimize (notably: coalesce the partitions of) a plan
       // executed FOR CACHING. Default false pins every InMemoryRelation to
       // the static shuffle.partitions width, so each SharedFrames cache
@@ -45,7 +42,6 @@ object Engine {
         "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.filterPushdown", "true")
       // The default generated-class cache holds 100 entries; a session
       // running the full query surface (some with very large generated
       // aggregates — the 64-permutation MinHash signature takes ~6 s of
@@ -73,13 +69,12 @@ object Engine {
 
   /** The between-query reset of Bench, Verify and the probe mains, so each
     * query starts against a clean block store:
-    *  - `clearCache` drops SQL-cached plans (operators may cache
-    *    intermediates, e.g. LSH signature/candidate stages);
+    *  - `clearCache` drops the SQL-cached plans, i.e. the
+    *    [[graft.queries.SharedFrames]] registry's entries (the registry
+    *    re-persists an entry on its next access);
     *  - the blocking scratch sweep ([[graft.operators.Checkpoints.sweepScratch]])
-    *    releases RDD-level persists and scratch-checkpoint blocks, which
-    *    otherwise wait for GC + ContextCleaner, and skips any checkpoint RDD
-    *    not minted by `Checkpoints.scratch`, whose truncated lineage could
-    *    never recompute;
+    *    frees the checkpoints minted by `Checkpoints.scratch` and not yet
+    *    released, which otherwise wait for GC + ContextCleaner;
     *  - `System.gc()` lets the ContextCleaner reap dead broadcast blocks,
     *    which `clearCache` does not release: across a 50+-query run the
     *    dead HashedRelations pile up in storage memory and the late

@@ -34,12 +34,13 @@ object SparkEntry {
     * inside your timing / error-handling scope, not just the action on the
     * returned frame. Additionally, the returned plan (and any scratch
     * blocks backing it) is only guaranteed valid until the session's next
-    * block-store sweep: Bench/Verify unpersist all RDDs BETWEEN queries,
-    * which destroys localCheckpoint blocks irrecoverably — so no builder
-    * may defer reading a scratch frame across a sweep boundary — re-invoke
-    * the builder (a fresh construction re-checkpoints) rather than
-    * re-executing a frame obtained before the sweep. Bench/Verify already
-    * follow this: every rep calls the builder anew. */
+    * block-store sweep: between queries Bench/Verify free every scratch
+    * checkpoint minted so far ([[graft.operators.Checkpoints.sweepScratch]]),
+    * which destroys its blocks irrecoverably — so no builder may defer
+    * reading a scratch frame across a sweep boundary — re-invoke the
+    * builder (a fresh construction re-checkpoints) rather than re-executing
+    * a frame obtained before the sweep. Bench/Verify already follow this:
+    * every rep calls the builder anew. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (n, f, _) => n -> f }.toMap
 

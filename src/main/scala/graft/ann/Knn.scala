@@ -73,20 +73,13 @@ object Knn {
     * shuffles, and only sample×dim (pos, sum) pairs. */
   def ivfTrain(embs: DataFrame, nClusters: Int, iters: Int = 2,
       sampleMod: Int = 10): Array[(Long, Array[Float])] = {
-    // the sample is re-consumed every Lloyd iteration — persist for training.
-    // Ownership-aware: when another trainer (e.g. the PQ half of an IVF-PQ
-    // build, whose k equals nClusters) has already cached the identical
-    // sample plan, piggyback on its entry instead of re-persisting — a
-    // second persist on a cached plan logs "Asked to cache already cached
-    // data" (the r10 residue) and an unconditional unpersist in our finally
-    // would yank the owner's cache mid-training.
-    val base = graft.Tables.parallelized(embs)
+    // the sample is re-consumed every Lloyd iteration: a scratch copy for
+    // the training loop, freed when it ends
+    val base = graft.operators.Checkpoints.scratch(graft.Tables.parallelized(embs)
       .filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0 ||
         col("vec_id") < nClusters) // top-up for tiny fixtures (dense ids);
         // for sparse key spaces the hash sample itself must cover nClusters
-      .select(col("vec_id"), col("embedding"))
-    val owned = base.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) base.persist()
+      .select(col("vec_id"), col("embedding")))
     try {
       // deterministic init: the nClusters lowest vec_ids in the sample
       // (works for any key space — no dense-0-based assumption)
@@ -113,7 +106,7 @@ object Knn {
         }
       }
       centroids
-    } finally if (owned) base.unpersist(blocking = false)
+    } finally graft.operators.Checkpoints.release(base)
   }
 
   /** IVF-flat approximate top-k: rank centroids against the query on the

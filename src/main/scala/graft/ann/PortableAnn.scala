@@ -98,8 +98,8 @@ object PortableAnn {
     * [[quantized]] frame. */
   def ivfTrainInt(q: DataFrame, nClusters: Int, iters: Int = 2,
       sampleMod: Int = 10, topUp: Int = 0): Array[(Long, Array[Long])] = {
-    val base = sampled(q, sampleMod, math.max(nClusters, topUp))
-      .select("vec_id", "qv").persist()
+    val base = graft.operators.Checkpoints.scratch(
+      sampled(q, sampleMod, math.max(nClusters, topUp)).select("vec_id", "qv"))
     try {
       var cents: Array[(Long, Array[Long])] =
         base.orderBy("vec_id").limit(nClusters).collect()
@@ -120,7 +120,7 @@ object PortableAnn {
         }
       }
       cents
-    } finally base.unpersist(blocking = false)
+    } finally graft.operators.Checkpoints.release(base)
   }
 
   /** Probe order: all cids ranked by integer L2 to the query, ties → smaller
@@ -188,7 +188,8 @@ object PortableAnn {
       sampleMod: Int = 10): Array[Array[Array[Long]]] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val w = dim / m
-    val base = sampled(q, sampleMod, k).select("vec_id", "qv").persist()
+    val base = graft.operators.Checkpoints.scratch(
+      sampled(q, sampleMod, k).select("vec_id", "qv"))
     try {
       val initRows = base.orderBy("vec_id").limit(k).collect()
         .map(_.getSeq[Long](1).toArray)
@@ -215,7 +216,7 @@ object PortableAnn {
         })
       }
       cbs
-    } finally base.unpersist(blocking = false)
+    } finally graft.operators.Checkpoints.release(base)
   }
 
   /** Query-side ADC tables: dt(s)(c) = integer ‖q_sub(s) − codebook(s)(c)‖²

@@ -63,14 +63,11 @@ object Pq {
       iters: Int = 2, sampleMod: Int = 10): Array[Array[Array[Float]]] = {
     require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
     val w = dim / m
-    // ownership-aware persist — see Knn.ivfTrain: the IVF half of an
-    // IVF-PQ build caches the identical sample plan when k == nClusters
-    val base = graft.Tables.parallelized(embs)
+    // a scratch copy of the sample for the training loop, as in Knn.ivfTrain
+    val base = graft.operators.Checkpoints.scratch(graft.Tables.parallelized(embs)
       .filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0 ||
         col("vec_id") < k) // top-up so init always finds k rows
-      .select(col("vec_id"), col("embedding"))
-    val owned = base.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (owned) base.persist()
+      .select(col("vec_id"), col("embedding")))
     try {
       // deterministic init: the k lowest vec_ids' subvectors, per subspace
       val initRows = base.orderBy("vec_id").limit(k).collect()
@@ -103,7 +100,7 @@ object Pq {
         })
       }
       codebooks
-    } finally if (owned) base.unpersist(blocking = false)
+    } finally graft.operators.Checkpoints.release(base)
   }
 
   /** Encode every vector to its `m` nearest-code ids — one narrow map, the

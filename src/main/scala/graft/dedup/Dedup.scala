@@ -75,7 +75,7 @@ object Dedup {
     * checkpoint blocks are NOT CacheManager entries (`clearCache` does not
     * touch them); they die with the frame reference — reaped by the
     * ContextCleaner's periodic GC, or immediately by the between-query
-    * RDD sweep Bench/Verify run. Signatures are NOT cached — since they
+    * scratch sweep Bench/Verify run. Signatures are NOT cached — since they
     * became a narrow per-row expression, both band-join legs share one
     * computed exchange via ReuseExchange. */
   def minHashPairs(docs: DataFrame, p: MinHashParams = MinHashParams(),
@@ -390,8 +390,10 @@ object Dedup {
     * emission is the wrong tool for those; they route to the cluster-level
     * connected-components pass (q58/q131 family), and this operator emits
     * the pairs discoverable through at least one SPARSE bucket, bounding
-    * the SKEW term of the candidate mass at cap²/2 per bucket. The
-    * tools/BucketProbe census shows the cutoff is a GUARD, not a speedup,
+    * the SKEW term of the candidate mass at cap²/2 per bucket. A
+    * compound-key bucket census (exploded rows, buckets over the cap, and
+    * Σ C(bucket,2) with and without the cutoff, r13) shows the cutoff is a
+    * GUARD, not a speedup,
     * at measured scales: at ×64 (320k docs, j = 2) dense buckets hold
     * only 2.06M of 628M candidate pairs (0.3% — max bucket 368), and the
     * pipeline is SHUFFLE-BOUND on exploded rows (j = 3 at ×64 measures

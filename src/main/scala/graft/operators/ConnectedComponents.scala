@@ -1,11 +1,7 @@
 package graft.operators
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components by hash-to-min label propagation — the
   * clustering step of a dedup pipeline: near-dup PAIRS (MinHash/SimHash/
@@ -28,131 +24,6 @@ import org.apache.spark.storage.StorageLevel
   * same (vertices, edges) input yields the same labeling on any cluster
   * layout, which is what makes the result DuckDB-oracle-checkable.
   */
-/** Scratch checkpoints: the block-store RDD behind a
-  * `localCheckpoint(eager = true)` Dataset — its plan is a single
-  * [[LogicalRDD]] leaf holding the materialized InternalRow RDD. Iterative
-  * kernels free their rounds' blocks through [[Rounds]], whose scaladoc
-  * states when that is safe. */
-private[graft] object Checkpoints {
-  def rddOf(df: DataFrame): Option[RDD[InternalRow]] =
-    df.queryExecution.analyzed.collectFirst { case lr: LogicalRDD => lr.rdd }
-
-  /** Materialize a mid-query scratch frame ONCE (eager local checkpoint)
-    * so several consumer branches of a lazily-returned plan share a single
-    * computation WITHOUT a `persist()` entry: a kernel that returns a lazy
-    * result has no post-action point at which to unpersist, so a cache
-    * entry it creates outlives the query in the session's CacheManager
-    * (the r9 leak class — nine sites, "Asked to cache already cached
-    * data" warnings on every re-execution). Checkpoint blocks instead die
-    * with the frame reference (ContextCleaner periodic GC, or
-    * Bench/Verify's between-query RDD sweep). The standard localCheckpoint
-    * trade applies at cluster scale: blocks are unreplicated, so an
-    * executor loss fails the query instead of recomputing — acceptable
-    * for within-query scratch, NOT for cross-query shared frames (those
-    * stay in the stamped [[graft.queries.SharedFrames]] registry, which
-    * owns an explicit eviction lifecycle). A frame that already IS a live
-    * scratch checkpoint (a bare [[LogicalRDD]] leaf from the scratch set)
-    * comes back unchanged: a second copy would rewrite the same rows. */
-  def scratch(df: DataFrame): DataFrame = df.queryExecution.analyzed match {
-    case lr: LogicalRDD if scratchIds.contains(lr.rdd.id) => df
-    case _ =>
-      val out = df.localCheckpoint(eager = true)
-      rddOf(out).foreach(r => scratchIds.add(r.id))
-      out
-  }
-
-  /** Free the blocks behind each scratch frame now, not at the next sweep.
-    * Only for frames nothing will read again (see [[Rounds]]). */
-  def release(dfs: DataFrame*): Unit =
-    dfs.flatMap(rddOf).foreach { r =>
-      r.unpersist(blocking = false)
-      scratchIds.remove(r.id)
-    }
-
-  /** True iff `df`'s analyzed plan (subqueries included) reads a
-    * checkpoint minted by [[scratch]] and not yet swept — i.e. `df` dies
-    * at the next query boundary. [[graft.queries.SharedFrames.sharedFrame]]
-    * refuses such a frame at build time: a registry entry outlives the
-    * query, and after [[sweepScratch]] its recompute would read freed
-    * blocks ("Checkpoint block not found"). */
-  def scratchRooted(df: DataFrame): Boolean =
-    df.queryExecution.analyzed.collectWithSubqueries {
-      case lr: LogicalRDD if scratchIds.contains(lr.rdd.id) => lr
-    }.nonEmpty
-
-  /** [[scratch]] plus a row count matching `pred`, read from the SAME
-    * materialization job via `Dataset.observe` (CollectMetricsExec — a
-    * codegen-neutral accumulator node): the iterative kernels' per-round
-    * convergence probe (`next.filter(pred).count()`) was a whole extra
-    * Spark job per round reading the just-written checkpoint blocks (r16
-    * measurement: one such job per BFS/CC round at 0.02–0.07 s each, ~10%
-    * of a fixed-point query at sf0.1). Counting inside the checkpoint's
-    * own execution makes the probe free. */
-  def scratchCount(df: DataFrame, pred: Column): (DataFrame, Long) =
-    scratchAgg(df, Seq(coalesce(sum(when(pred, 1L)), lit(0L)).cast("long")
-      .as("n"))) match { case (out, row) => (out, row.getLong(0)) }
-
-  /** General form of [[scratchCount]]: materialize `df` and return the
-    * given (named) aggregates computed by the SAME job via
-    * `Dataset.observe`. Should the metric not surface (observe is filled by
-    * any full execution of the plan, which an eager checkpoint is), the
-    * same aggregates run over the materialized frame instead. */
-  def scratchAgg(df: DataFrame, aggs: Seq[Column]): (DataFrame, Row) = {
-    val name = "conv_" + java.util.UUID.randomUUID.toString.take(8)
-    val observed = df.observe(name, aggs.head, aggs.tail: _*)
-    val out = scratch(observed)
-    (out, observed.queryExecution.observedMetrics.getOrElse(name,
-      out.agg(aggs.head, aggs.tail: _*).head()))
-  }
-
-  /** Ids of every checkpoint RDD minted by [[scratch]] and not yet
-    * released or swept; the set is drained on every sweep. */
-  private val scratchIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-
-  /** The between-query block-store sweep used by Bench/Verify/the probes.
-    * Scope: plain persisted RDDs (always recomputable from lineage) plus
-    * checkpoint RDDs minted by [[scratch]] (dead at any query boundary by
-    * the scratch invariant). A locally-checkpointed RDD NOT minted here is
-    * left alone — its lineage is truncated, so unpersisting it would turn a
-    * future consumer's recompute into "Checkpoint block not found" instead
-    * of a recompute. No such RDD exists today (every eager checkpoint in
-    * the engine goes through [[scratch]]), but a checkpoint-rooted shared
-    * frame would be exactly that, and this guard is what lets it survive
-    * the sweep. */
-  /** @param blocking the Bench/Verify/probe mains pass true for EVERY
-    *   sweep: their sweeps sit outside the timed reps (local block removal
-    *   is milliseconds there), each timed rep then starts against a
-    *   provably clean block store, and — decisive for the last sweep —
-    *   async unpersist futures still in flight when `spark.stop()` shuts
-    *   the executor pool die with RejectedExecutionException stack traces
-    *   in the process tail, noise the bench's bounded-tail stdout contract
-    *   can't afford near the JSON line. The async default remains for
-    *   latency-sensitive callers inside a query. */
-  def sweepScratch(sc: org.apache.spark.SparkContext,
-      blocking: Boolean = false): Unit = {
-    // snapshot the id set BEFORE the block listing: scratch() persists
-    // before registering, so any id captured here had its blocks live by
-    // the time `live` is taken — if it's absent from `live`, it is
-    // genuinely gone (freed by its loop / ContextCleaner), never
-    // merely-just-minted
-    val before = new java.util.HashSet[Int](scratchIds)
-    val live = sc.getPersistentRDDs
-    live.values.foreach { rdd =>
-      if (!rdd.isCheckpointed || scratchIds.contains(rdd.id)) {
-        rdd.unpersist(blocking)
-        // remove only what was actually swept — a blanket clear() would
-        // orphan ids minted concurrently during the sweep, leaving their
-        // blocks permanently unsweepable (RDD ids are never reused, so a
-        // lingering id can't mis-match a future RDD; it could only leak)
-        scratchIds.remove(rdd.id)
-      }
-    }
-    // bound the set: prune pre-sweep ids whose RDDs are already gone
-    scratchIds.removeIf(id => before.contains(id) && !live.contains(id))
-  }
-}
-
 object ConnectedComponents {
   import Rounds.Round
 
@@ -187,11 +58,13 @@ object ConnectedComponents {
           val nbrMin = sym
             .join(labels.select(col("id").as("dst"), col("comp")), "dst")
             .groupBy(col("src").as("id")).agg(min("comp").as("nbr"))
+          // left lazy although the jump join reads it twice: the round
+          // recomputes labels ⋈ nbrMin once more, but runs a fixed number
+          // of jobs (a persist here varied the AQE query-stage jobs per rep)
           val stepped = labels.join(nbrMin, Seq("id"), "left")
             .select(col("id"),
               least(col("comp"), coalesce(col("nbr"), col("comp"))).as("comp"),
               (coalesce(col("nbr"), col("comp")) < col("comp")).as("chg"))
-            .persist(StorageLevel.MEMORY_AND_DISK) // consumed twice by the jump join
           // (b) pointer-jump: comp := min(comp, label(comp)). Labels only ever
           // decrease toward the component's min id, so the fixpoint is the
           // same — but a length-k label chain becomes length ⌈k/2⌉ per round.
@@ -210,7 +83,6 @@ object ConnectedComponents {
                 (col("chg") ||
                   coalesce(col("jump"), col("comp")) < col("comp")).as("chg")),
             col("chg"))
-          stepped.unpersist(blocking = false)
           Round(next.drop("chg"), Seq(next), more = nChanged > 0)
       }
       try {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 
 /** The round loop of the iterative kernels whose rounds are Spark frames
   * (PageRank, label propagation, BFS, k-core peeling, connected components,
-  * Bradley–Terry): run a step per round, stop at the kernel's own fixed
+  * Bradley–Terry, BPE merge induction): run a step per round, stop at the kernel's own fixed
   * point or at the round budget, and free each round's scratch blocks one
   * round late. HITS keeps its scores as driver-side vectors instead
   * (`Graph.hits`) and has no round frames to free.

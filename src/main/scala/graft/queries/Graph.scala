@@ -254,9 +254,9 @@ object Graph {
     * query, and a session running several of them (q136 + q138 + q146)
     * would otherwise rebuild it each time. The shared frame is persisted at
     * creation; the kernels' own entry persists are no-ops on a
-    * still-cached frame and transparently re-cache it after an external
-    * unpersist sweep (e.g. Bench's between-query block-store reset, which
-    * deliberately keeps timed queries independent). A rewritten lineitem
+    * still-cached frame and transparently re-cache it after a `clearCache`
+    * (e.g. Bench's between-query reset, which deliberately keeps timed
+    * queries independent). A rewritten lineitem
     * invalidates via the stamp (unpersisting the superseded frame); a
     * restarted session via `sessionUUID` in the key. Built FROM the shared
     * [[SharedFrames.basketItems]] frame, so a session mixing basket-mining

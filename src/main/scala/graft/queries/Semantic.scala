@@ -165,8 +165,8 @@ object Semantic {
     * see and [[graft.SemanticSpec]] pins by direct comparison. */
   def ivfTrainIntJoin(spark: SparkSession, q: DataFrame, nClusters: Int,
       iters: Int = 2, sampleMod: Int = 10): Array[(Long, Array[Long])] = {
-    val base = PortableAnn.sampled(q, sampleMod, nClusters)
-      .select("vec_id", "qv").persist()
+    val base = graft.operators.Checkpoints.scratch(
+      PortableAnn.sampled(q, sampleMod, nClusters).select("vec_id", "qv"))
     try {
       var cents: Array[(Long, Array[Long])] =
         base.orderBy("vec_id").limit(nClusters).collect()
@@ -187,7 +187,7 @@ object Semantic {
         }
       }
       cents
-    } finally base.unpersist(blocking = false)
+    } finally graft.operators.Checkpoints.release(base)
   }
 
   /** Frozen tiered-k centroid model for `dir`'s embeddings, trained once per

@@ -17,10 +17,11 @@ import graft.Tables
   */
 object SharedFrames {
 
-  /** Re-persist-on-access: an external cache sweep (Bench's between-query
-    * block-store reset, a session's own `clearCache`) silently clears the
-    * persist marker, and an unpersisted shared frame would recompute its
-    * shuffle per consumer — the exact cost the cache exists to pay once. */
+  /** Re-persist-on-access: a `clearCache` (the between-query reset's, or a
+    * session's own) drops the entry, and an unpersisted shared frame would
+    * recompute its shuffle per consumer — the exact cost the cache exists
+    * to pay once. The scratch sweep never touches an entry: it frees only
+    * what [[graft.operators.Checkpoints.scratch]] minted. */
   private def repersisted(df: DataFrame): DataFrame = {
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       df.persist()
@@ -31,8 +32,9 @@ object SharedFrames {
     * fingerprinted source, `kind` the derivation.
     *
     * A shared frame must be recomputable from its lineage: the registry
-    * keeps it across queries, and the between-query sweep
-    * ([[graft.operators.Checkpoints.sweepScratch]]) frees every
+    * keeps it across queries — its cache entry is the only materialization
+    * that outlives the between-query sweep
+    * ([[graft.operators.Checkpoints.sweepScratch]]), which frees every
     * [[graft.operators.Checkpoints.scratch]] block. A newly built frame
     * rooted in such a block is therefore refused with an
     * IllegalStateException naming `kind`; the check runs only on a build,

@@ -5,7 +5,7 @@ import graft.dedup.Dedup
 import graft.functions.{TextFunctions => T}
 import graft.operators.{ConnectedComponents, Rounds}
 import graft.operators.Rounds.Round
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -358,7 +358,9 @@ object Training {
         expr("substring(w, i + 1, 1)").as("b"), col("f"))
       .groupBy("a", "b").agg(sum("f").as("cnt"))
 
-    val words = words0.persist() // consumed by round-1 count AND merge pass
+    // consumed by the round-1 count AND the lazily returned merge pass: a
+    // scratch copy, since the returned plan has no point to unpersist at
+    val words = graft.operators.Checkpoints.scratch(words0)
     // the chosen pair is a 1-row PARAMETER (like an ANN query vector): fetch
     // it once instead of re-evaluating the round-1 aggregate under two
     // crossJoin consumers — this is also the real trainer's shape, where
@@ -371,7 +373,7 @@ object Training {
       // degenerate vocabulary (every word a single symbol): nothing to
       // merge, and round 2 would be identical — return the empty pair
       // table rather than crashing on the missing argmax
-      words.unpersist(blocking = false)
+      graft.operators.Checkpoints.release(words)
       return words0.sparkSession.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(
@@ -408,7 +410,7 @@ object Training {
     * text corpus) and the next round counts over the MERGED symbols, so
     * step 2 can and does pick pairs containing step 1's token. Each round
     * is one vocabulary-sized aggregate; the chosen pair is a 1-row
-    * parameter fetch; retired vocabulary caches are released per step.
+    * parameter fetch; retired vocabulary checkpoints are freed per step.
     * The oracle chains the same rounds as CTEs and renders placeholders
     * back through the earlier merges — hash-verifying the whole
     * data-dependent induction. */
@@ -426,18 +428,18 @@ object Training {
       : (Seq[BpeMerge], Map[Char, String]) =
     graft.ann.Models.cachedLatest[(Seq[BpeMerge], Map[Char, String])](
       "bpe:" + graft.ann.Models.sessionId(spark) + ":" + steps + ":" + dir,
-      graft.ann.Models.corpusStamp(spark, dir, "documents")) {
-      val (words, merges, render) = bpeInduction(spark, dir, steps)
-      words.unpersist(blocking = false) // consumers rebuild lazily from merges
-      (merges, render)
-    }
+      graft.ann.Models.corpusStamp(spark, dir, "documents"))(
+      bpeInduction(spark, dir, steps))
 
-  /** One full induction run (no memo): each round is one vocabulary-sized
-    * aggregate, the argmax pair is a 1-row driver parameter fetch, and
-    * retired vocabulary caches release per step. The returned vocabulary
-    * frame is still persisted; callers that don't read it unpersist it. */
+  /** One full induction run (no memo) on [[graft.operators.Rounds]]: each
+    * round rewrites the vocabulary with the chosen merge into a scratch
+    * checkpoint and fetches the next argmax pair (a 1-row driver parameter
+    * fetch over one vocabulary-sized aggregate); the loop stops after
+    * `steps` merges or when no pair is left. Earlier rounds' vocabularies
+    * are freed one round late and the last one on return: consumers
+    * rebuild the vocabulary lazily from the merges. */
   private[queries] def bpeInduction(spark: SparkSession, dir: String, steps: Int)
-      : (DataFrame, Seq[BpeMerge], Map[Char, String]) = {
+      : (Seq[BpeMerge], Map[Char, String]) = {
     def pairCounts(df: DataFrame, wcol: String): DataFrame = df
       .filter(length(col(wcol)) >= 2)
       .select(col("f"), col(wcol).as("w"),
@@ -446,41 +448,37 @@ object Training {
         expr("substring(w, i + 1, 1)").as("b"), col("f"))
       .groupBy("a", "b").agg(sum("f").as("cnt"))
 
-    var words = Tables.parallelized(Tables.load(spark, dir, "documents"))
-      .select(explode(split(col("text"), " ")).as("word"))
-      .groupBy("word").agg(count(lit(1)).as("f"))
-      .persist()
+    // the argmax adjacent pair (a, b, cnt) of a vocabulary, if any is left
+    def best(words: DataFrame): Option[Row] = pairCounts(words, "word")
+      .orderBy(desc("cnt"), col("a"), col("b")).limit(1)
+      .take(1).headOption // 1-row parameter fetch, like the ANN query vector
     var render = Map.empty[Char, String] // placeholder -> plain expansion
     def expand(s: String): String =
       s.flatMap(c => render.getOrElse(c, c.toString))
     val merges = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var step = 1
-    var exhausted = false
-    while (step <= steps && !exhausted) {
-      val best = pairCounts(words, "word")
-        .orderBy(desc("cnt"), col("a"), col("b")).limit(1)
-        .take(1) // 1-row parameter fetch, like the ANN query vector
-      if (best.isEmpty) {
-        // every word merged down to a single symbol — no pair left to
-        // learn; a real trainer stops here too
-        exhausted = true
-      } else {
-        val (a, b, cnt) =
-          (best.head.getString(0), best.head.getString(1), best.head.getLong(2))
+    val words0 = graft.operators.Checkpoints.scratch(
+      Tables.parallelized(Tables.load(spark, dir, "documents"))
+        .select(explode(split(col("text"), " ")).as("word"))
+        .groupBy("word").agg(count(lit(1)).as("f")))
+    val pair0 = if (steps > 0) best(words0) else None
+    // a vocabulary whose words are all single symbols has no pair left to
+    // learn: a real trainer stops there too
+    val (last, _) = Rounds.iterate(
+        Round((words0, pair0), Seq(words0), more = pair0.nonEmpty), steps) {
+      case ((words, pair), step) =>
+        val (a, b, cnt) = (pair.get.getString(0), pair.get.getString(1),
+          pair.get.getLong(2))
         val sym = step.toChar // chr(1), chr(2), ... — never in corpus text
         render += sym -> expand(a + b)
-        val next = words
-          .select(replace(col("word"), lit(a + b), lit(sym.toString)).as("word"),
-            col("f"))
-          .persist()
-        next.count()
-        words.unpersist(blocking = false)
-        words = next
         merges += BpeMerge(step.toLong, a, b, expand(a), expand(b), cnt)
-        step += 1
-      }
+        val next = graft.operators.Checkpoints.scratch(words
+          .select(replace(col("word"), lit(a + b), lit(sym.toString)).as("word"),
+            col("f")))
+        val nextPair = if (step < steps) best(next) else None
+        Round((next, nextPair), Seq(next), more = nextPair.nonEmpty)
     }
-    (words, merges.toSeq, render)
+    graft.operators.Checkpoints.release(last.frames: _*)
+    (merges.toSeq, render)
   }
 
   def q135(spark: SparkSession, dir: String, steps: Int = 3): DataFrame = {

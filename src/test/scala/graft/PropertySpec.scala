@@ -747,30 +747,11 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("q267 runs at most 12 Spark jobs on a warm execution") {
-    import org.apache.spark.scheduler.SparkListenerJobStart
-    val sc = spark.sparkContext
     val q267 = SparkEntry.queries("q267_hits")
     q267(spark, smokeSf).collect()
     Engine.resetBetweenQueries(spark)
-    // listener events arrive asynchronously but in order: a sentinel job
-    // run after the query marks where its jobs end
-    val sentinel = "graft.property-spec.sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val seen = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (Option(j.properties).exists(_.getProperty(sentinel) != null))
-          seen.countDown()
-        else jobs.incrementAndGet()
-    }
-    sc.addSparkListener(l)
-    try {
-      assert(q267(spark, smokeSf).collect().nonEmpty)
-      sc.setLocalProperty(sentinel, "1")
-      try spark.range(1).collect() finally sc.setLocalProperty(sentinel, null)
-      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(l)
-    assert(jobs.get <= 12, s"${jobs.get} jobs, builder plus action")
+    val jobs = jobsDuring(assert(q267(spark, smokeSf).collect().nonEmpty))
+    assert(jobs <= 12, s"$jobs jobs, builder plus action")
   }
 
   test("a sharedFrame built inside another's build fails naming both keys") {
@@ -960,6 +941,104 @@ class PropertySpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))).toMap
       assert(got == expected, s"trial $trial: $got != $expected")
+    }
+  }
+
+  /** Spark jobs started while `run` runs, counted by a listener; a
+    * sentinel job run after it marks where its jobs end, since listener
+    * events arrive asynchronously but in order. */
+  private def jobsDuring(run: => Unit): Int = {
+    import org.apache.spark.scheduler.SparkListenerJobStart
+    val sc = spark.sparkContext
+    val sentinel = "graft.property-spec.sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty(sentinel) != null))
+          seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      run
+      sc.setLocalProperty(sentinel, "1")
+      try spark.range(1).collect() finally sc.setLocalProperty(sentinel, null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("q58 runs the same number of Spark jobs on every warm execution") {
+    val q58 = SparkEntry.queries("q58_dedup_clusters")
+    q58(spark, smokeSf).collect()
+    val counts = (1 to 5).map { _ =>
+      Engine.resetBetweenQueries(spark)
+      jobsDuring(assert(q58(spark, smokeSf).collect().nonEmpty))
+    }
+    Engine.resetBetweenQueries(spark)
+    assert(counts.distinct.size == 1, s"builder plus action jobs per rep: $counts")
+  }
+
+  test("a shared frame keeps its cached blocks across a scratch sweep") {
+    import graft.queries.SharedFrames.basketItems
+    val sc = spark.sparkContext
+    Engine.resetBetweenQueries(spark)
+    val n = basketItems(spark, smokeSf).count()
+    graft.operators.Checkpoints.sweepScratch(sc, blocking = true)
+    val cached = spark.sharedState.cacheManager
+      .lookupCachedData(basketItems(spark, smokeSf)
+        .asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder.cachedColumnBuffers.id)
+    assert(cached.nonEmpty, "the basket frame has no cache entry")
+    def blocks = sc.getRDDStorageInfo.filter(i => cached.contains(i.id))
+      .map(_.numCachedPartitions).sum
+    assert(basketItems(spark, smokeSf).count() == n)
+    assert(blocks > 0, "the sweep dropped the entry's blocks")
+    // a stage that is actually submitted and reads a file scan
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onStageSubmitted(
+          e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
+          scans.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try assert(jobsDuring(assert(basketItems(spark, smokeSf).count() == n)) > 0)
+    finally sc.removeSparkListener(l)
+    assert(scans.get == 0, s"${scans.get} stages re-scanned lineitem")
+    assert(blocks > 0)
+    Engine.resetBetweenQueries(spark)
+  }
+
+  test("bpeMergeStep leaves no cache entry behind") {
+    spark.catalog.clearCache()
+    val words = Seq(("abab", 3L), ("abc", 2L), ("bca", 1L)).toDF("word", "f")
+    assert(graft.queries.Training.bpeMergeStep(words).collect().nonEmpty)
+    assert(spark.sharedState.cacheManager.isEmpty)
+    graft.operators.Checkpoints.sweepScratch(spark.sparkContext, blocking = true)
+  }
+
+  test("the ANN trainers leave no persisted RDD and no scratch checkpoint behind") {
+    import graft.ann.{Knn, PortableAnn, Pq}
+    val embs = Tables.load(spark, smokeSf, "embeddings")
+    val qz = PortableAnn.quantized(embs)
+    val trainers: Seq[(String, () => Any)] = Seq(
+      "Knn.ivfTrain" -> (() => Knn.ivfTrain(embs, nClusters = 8)),
+      "Pq.pqTrain" -> (() => Pq.pqTrain(embs, dim = 64, m = 8, k = 16)),
+      "PortableAnn.ivfTrainInt" -> (() => PortableAnn.ivfTrainInt(qz, nClusters = 8)),
+      "PortableAnn.pqTrainInt" ->
+        (() => PortableAnn.pqTrainInt(qz, dim = 64, m = 8, k = 16)),
+      "Semantic.ivfTrainIntJoin" ->
+        (() => graft.queries.Semantic.ivfTrainIntJoin(spark, qz, nClusters = 8)))
+    val sc = spark.sparkContext
+    for ((name, train) <- trainers) {
+      val (rdds, ids) = (sc.getPersistentRDDs.keySet,
+        graft.operators.Checkpoints.liveIds)
+      train()
+      assert((sc.getPersistentRDDs.keySet -- rdds).isEmpty, s"$name left a persisted RDD")
+      assert((graft.operators.Checkpoints.liveIds -- ids).isEmpty,
+        s"$name left a scratch checkpoint")
     }
   }
 }

@@ -372,8 +372,9 @@ object Training {
     if (bpRow.isEmpty) {
       // degenerate vocabulary (every word a single symbol): nothing to
       // merge, and round 2 would be identical — return the empty pair
-      // table rather than crashing on the missing argmax
-      graft.operators.Checkpoints.release(words)
+      // table rather than crashing on the missing argmax. Free only a copy
+      // this call made: a caller's own scratch frame comes back as `words`
+      if (words ne words0) graft.operators.Checkpoints.release(words)
       return words0.sparkSession.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](),
         org.apache.spark.sql.types.StructType(Seq(

@@ -1019,6 +1019,15 @@ class PropertySpec extends AnyFunSuite {
     graft.operators.Checkpoints.sweepScratch(spark.sparkContext, blocking = true)
   }
 
+  test("bpeMergeStep keeps a caller's scratch frame readable on the degenerate path") {
+    val words = graft.operators.Checkpoints.scratch(
+      Seq(("a", 3L), ("b", 1L), ("c", 2L)).toDF("word", "f"))
+    assert(graft.queries.Training.bpeMergeStep(words).collect().isEmpty)
+    assert(words.count() == 3)
+    assert(graft.operators.Checkpoints.scratchRooted(words))
+    graft.operators.Checkpoints.release(words)
+  }
+
   test("the ANN trainers leave no persisted RDD and no scratch checkpoint behind") {
     import graft.ann.{Knn, PortableAnn, Pq}
     val embs = Tables.load(spark, smokeSf, "embeddings")

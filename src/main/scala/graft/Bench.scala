@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** First field of /proc/loadavg (1-minute load), or -1 off-Linux. The

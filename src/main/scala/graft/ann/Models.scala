@@ -6,16 +6,13 @@ import org.apache.spark.sql.SparkSession
   * hyperparameters) — the serving contract every ANN system runs: models are
   * trained per CORPUS, not per query, and a query pays only its scan. The
   * fingerprint is derived from the corpus files' sizes and modification
-  * times, so a rewritten corpus invalidates automatically (the same rule the
-  * persisted [[IvfPqIndex]] bakes into its index path) and a cached model
-  * can never serve stale parameters. Training is deterministic
+  * times, so a rewritten corpus invalidates automatically (the same rule
+  * the persisted [[PortableIvfPqIndex]] bakes into its index path) and a
+  * cached model can never serve stale parameters. Training is deterministic
   * (hash-sampled, lowest-id init, fixed tie rules), so a cache hit is
   * bit-identical to retraining — the spec asserts it.
   */
 object Models {
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
 
   /** Fingerprint of a parquet table's files: fold of (length, mtime) over
     * the file listing. Cheap (pure metadata), change-sensitive, and stable
@@ -34,12 +31,6 @@ object Models {
     java.lang.Long.toHexString(acc)
   }
 
-  /** Train-once gate: returns the cached model for `key`, training it on
-    * first use. The key MUST embed the corpus stamp and every
-    * hyperparameter that shapes the model. */
-  def cached[T <: AnyRef](key: String)(train: => T): T =
-    cache.computeIfAbsent(key, _ => train).asInstanceOf[T]
-
   /** Genuinely unique live-session identity for cache keys.
     * `identityHashCode` alone is NOT unique across a session's lifetime —
     * a stopped session's hash can recycle into a NEW session, which would
@@ -54,10 +45,10 @@ object Models {
   private val latest =
     new java.util.concurrent.ConcurrentHashMap[String, (String, AnyRef)]()
 
-  /** Latest-stamp variant of [[cached]]: one live entry per `baseKey`, keyed
-    * by the corpus `stamp`. A stamp change (the driver regenerates fixtures
-    * between rounds) EVICTS the superseded value through `onEvict` — the
-    * plain registry would accumulate entries for dead corpora for the
+  /** Train-once gate: one live entry per `baseKey`, keyed by the corpus
+    * `stamp`, trained on first use. A stamp change (fixtures regenerated
+    * between runs) EVICTS the superseded value through `onEvict` — a plain
+    * key→model map would accumulate entries for dead corpora for the
     * process lifetime, and a persisted DataFrame in such an entry would pin
     * executor storage for data that can never be read again. `baseKey` must
     * embed a genuinely unique session id ([[org.apache.spark.sql.SparkSession.sessionUUID]],
@@ -95,13 +86,15 @@ object Models {
   private val building = new ThreadLocal[String]
 }
 
-/** Build-once path scheme shared by the persisted index families
-  * ([[IvfPqIndex]], [[PortableIvfPqIndex]]) — ONE implementation of the
-  * staleness contract so the two can't drift: the index lives at a path
+/** Build-once path scheme shared by the persisted corpus indexes
+  * ([[PortableIvfPqIndex]] and the text signature store,
+  * [[graft.dedup.PortableSigStore]]) — ONE implementation of the
+  * staleness contract so they can't drift: the index lives at a path
   * derived from the corpus location AND a fingerprint of its files, so a
   * rewritten corpus gets a fresh index automatically and an unchanged one
-  * is never retrained; "built" is the codes table's `_SUCCESS` marker
-  * (written last, so a partial build never reads as complete). */
+  * is never retrained; "built" is the last-written table's `_SUCCESS`
+  * marker (the IVF-PQ codes, the store's sigs), so a partial build never
+  * reads as complete. */
 private[graft] object IndexPaths {
 
   /** Human-readable slug + a short md5 of the RAW path. The readable part

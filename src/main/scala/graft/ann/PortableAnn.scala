@@ -5,14 +5,14 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** ENGINE-PORTABLE integer-arithmetic ANN (r11 VERDICT #2): the same
-  * IVF / PQ / IVF-PQ architectures as [[Knn]]/[[Pq]]/[[IvfPq]], with every
+/** ENGINE-PORTABLE integer-arithmetic ANN (r11 VERDICT #2): IVF-flat, PQ
+  * (Jégou et al., TPAMI 2011) and IVF-PQ ("IVFADC", ibid. §VI), with every
   * arithmetic step replayable bit-for-bit by a SQL engine — which puts the
-  * WHOLE family (training included) under the driver's DuckDB hash gate
-  * instead of the recall-floor specs the float variants rest on.
+  * WHOLE family (training included) under the DuckDB hash gate, not just
+  * recall floors.
   *
-  * The float variants are legitimately unportable because Lloyd centroid
-  * means depend on float accumulation order. This module removes floats
+  * Float Lloyd centroid means depend on accumulation order, so a float
+  * model is not reproducible across engines. This module removes floats
   * entirely:
   *  - embeddings quantize to int64 (⌊x·100⌋ — the q30/q32/q159 convention);
   *  - distances are integer squared L2 (exact, associative — any
@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   * So the trained model, the encoded corpus, and the served top-k are a
   * pure function of the corpus bytes, identical in any engine.
   *
-  * Scale shape matches the float family: training scans a hash-sample;
+  * Scale shape: training scans a hash-sample;
   * assignment/encoding are narrow maps with model-as-literal (the int
   * codebooks ride through the same native `pq_encode`/`adc_dist`/`dot_i64`
   * codegen'd expressions — integer values are exact in double, so the
@@ -92,10 +92,9 @@ object PortableAnn {
   }
 
   /** Integer Lloyd over the portable hash-sample. Init = the `nClusters`
-    * lowest sampled vec_ids (cid = that vec_id, the [[Knn.ivfTrain]]
-    * labeling); update = per-position truncating-division mean; a cluster
-    * that wins no rows keeps its previous centroid. `q` must be a
-    * [[quantized]] frame. */
+    * lowest sampled vec_ids (cid = that vec_id); update = per-position
+    * truncating-division mean; a cluster that wins no rows keeps its
+    * previous centroid. `q` must be a [[quantized]] frame. */
   def ivfTrainInt(q: DataFrame, nClusters: Int, iters: Int = 2,
       sampleMod: Int = 10, topUp: Int = 0): Array[(Long, Array[Long])] = {
     val base = graft.operators.Checkpoints.scratch(
@@ -180,8 +179,10 @@ object PortableAnn {
     call_function("pq_encode", transform(qv, _.cast(DoubleType)),
       typedlit(cbs.map(_.map(_.map(_.toDouble).toSeq).toSeq).toSeq))
 
-  /** Integer Lloyd per subspace over the portable hash-sample (the
-    * [[Pq.pqTrain]] one-shuffle-per-iteration shape, integer arithmetic).
+  /** Integer Lloyd per subspace over the portable hash-sample: all m
+    * subspaces update in one shuffle per iteration (codes assigned by the
+    * narrow `pq_encode` map, one posexplode, (subspace, code, position)
+    * means); a code that wins no rows keeps its previous centroid.
     * `q` must be a (vec_id, qv) frame — raw quantized vectors for plain PQ,
     * residuals for IVF-PQ. */
   def pqTrainInt(q: DataFrame, dim: Int, m: Int, k: Int, iters: Int = 2,
@@ -268,8 +269,9 @@ object PortableAnn {
 
   // --------------------------------------------------------- integer IVF-PQ
 
-  /** Coarse int centroids + residual int codebooks — the [[IvfPq.Model]]
-    * shape in exact arithmetic. */
+  /** Coarse int centroids + residual int codebooks: PQ encodes the
+    * RESIDUAL (vector − list centroid), which the coarse step has already
+    * stripped of most of its energy. */
   final case class IntModel(cents: Array[(Long, Array[Long])],
       cbs: Array[Array[Array[Long]]])
 
@@ -338,9 +340,9 @@ object PortableAnn {
   }
 }
 
-/** Persistence for the PORTABLE IVF-PQ index — the [[IvfPqIndex]] deployment
-  * shape (train once, write model + cid-partitioned codes, serve via
-  * partition-pruned probe scans) for the integer model, so q103's
+/** Persistence for the PORTABLE IVF-PQ index — the deployment shape (train
+  * once, write model + cid-partitioned codes, serve via partition-pruned
+  * probe scans) for the integer model, so q103's
   * steady-state measures the serve path AND every byte of it replays under
   * the DuckDB hash gate. */
 object PortableIvfPqIndex {
@@ -644,7 +646,8 @@ object PortableIvfPqIndex {
       encoded: DataFrame, path: String): Unit = {
     import spark.implicits._
     // model tables FIRST, codes LAST — the codes _SUCCESS is the
-    // build-complete marker (IndexPaths.isBuilt); see IvfPqIndex.save
+    // build-complete marker (IndexPaths.isBuilt), so a crash mid-save
+    // never leaves a "built" index missing its centroids or codebooks
     model.cents.toSeq.map { case (cid, v) => (cid, v.toSeq) }
       .toDF("cid", "vec")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")

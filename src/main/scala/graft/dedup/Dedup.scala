@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.functions.{TextFunctions => T, VectorFunctions => V}
+import graft.functions.{TextFunctions => T}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,11 +15,12 @@ import org.apache.spark.sql.types._
   *             buckets only. Candidate volume is governed by the banding
   *             parameters, never by corpus², and the exact-Jaccard
   *             verification runs only on candidates.
-  *  - SimHash: per-row 64-bit fingerprint → 8×8-bit band buckets → pairs by
-  *             bucket → Hamming filter via bit_count(xor).
+  *  - SimHash: per-row 60-bit fingerprint → compound block-key buckets →
+  *             pairs by bucket → Hamming filter via bit_count(xor).
   *
-  * Everything is seeded/deterministic: same corpus → same pairs, on any
-  * cluster layout.
+  * Every random bit derives from md5 and fixed integer maps, so the result
+  * is a pure function of the corpus — the same pairs on any cluster layout,
+  * and in the DuckDB oracle that replays each pipeline.
   */
 object Dedup {
 
@@ -30,70 +31,7 @@ object Dedup {
     docs.groupBy(col(key))
       .agg(min(col(id)).as("keep_id"), count(lit(1)).as("dup_count"))
 
-  // ---------------------------------------------------------------- MinHash
-
-  /** numPerms hash permutations grouped into bands of `rowsPerBand`.
-    * Permutation i re-hashes each shingle hash with the salt i via xxhash64
-    * (overflow-free under ANSI mode, deterministic across executors). */
-  final case class MinHashParams(
-      shingleLen: Int = 3,
-      numPerms: Int = 64,
-      rowsPerBand: Int = 4) {
-    def bands: Int = numPerms / rowsPerBand
-  }
-
-  /** doc_id → minhash signature (array of numPerms mins).
-    *
-    * Computed by the native [[graft.plans.MinHashSignature]] expression: one
-    * fused loop per document inside whole-stage codegen — a narrow map with
-    * ZERO shuffles. (Earlier iterations used explode + a 64-column
-    * `min(xxhash64(h, i))` aggregate — correct, but it materializes the
-    * shingle stream and hash-shuffles it back to documents; the native
-    * expression produces bit-identical signatures, asserted in DedupSpec.)
-    * Docs with no shingles yield a NULL signature and are dropped, exactly
-    * as they vanished from the explode-then-aggregate plan. */
-  def minHashSignatures(docs0: DataFrame, p: MinHashParams): DataFrame = {
-    val docs = graft.Tables.parallelized(docs0)
-    docs.select(col("doc_id"),
-        call_function("minhash_sig",
-          T.wordShingleHashesRaw(col("text"), p.shingleLen), lit(p.numPerms))
-          .as("sig"))
-      .filter(col("sig").isNotNull)
-  }
-
-  /** Candidate pairs from LSH banding, verified with exact Jaccard over the
-    * shingle sets; returns (doc_a, doc_b, jaccard_x1e6) with doc_a < doc_b.
-    *
-    * The shingle sets are joined back only for the candidate pairs — the
-    * full corpus never carries its shingle arrays through the band shuffle.
-    *
-    * Materialization: ONE frame (the candidate pairs) is eagerly
-    * scratch-checkpointed here ([[graft.operators.Checkpoints.scratch]]) —
-    * it feeds three consumers (the pair output and both legs of the doc-id
-    * union), which would otherwise re-run the band join per consumer, and
-    * materializing it is the natural barrier of any LSH pipeline. The
-    * checkpoint blocks are NOT CacheManager entries (`clearCache` does not
-    * touch them); they die with the frame reference — reaped by the
-    * ContextCleaner's periodic GC, or immediately by the between-query
-    * scratch sweep Bench/Verify run. Signatures are NOT cached — since they
-    * became a narrow per-row expression, both band-join legs share one
-    * computed exchange via ReuseExchange. */
-  def minHashPairs(docs: DataFrame, p: MinHashParams = MinHashParams(),
-      minJaccardX1e6: Long = 800000L): DataFrame = {
-    val sigs = minHashSignatures(docs, p)
-
-    // band key: hash of (band index, the band's slice of the signature)
-    val bandKeys = (0 until p.bands).map { j =>
-      struct(lit(j).as("band"),
-        xxhash64(concat_ws(",",
-          slice(col("sig"), j * p.rowsPerBand + 1, p.rowsPerBand))).as("bkey"))
-    }
-    val exploded = sigs
-      .select(col("doc_id"), explode(array(bandKeys: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    lshJaccardPairs(docs, exploded, Seq("band", "bkey"),
-      T.shingleHashes(col("text"), p.shingleLen), minJaccardX1e6)
-  }
+  // ------------------------------------------------------------- LSH verify
 
   /** Shared LSH tail: band-bucket self-join → candidate pairs → exact-Jaccard
     * verify. `exploded` carries one row per (doc, band) with the band-key
@@ -141,7 +79,7 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard_x1e6")
   }
 
-  // ------------------------------------------------- MinHash (portable)
+  // ---------------------------------------------------------------- MinHash
 
   private val MersenneP = 2147483647L
   private val PermAs = Seq(1299709L, 15485863L, 32452843L, 49979687L,
@@ -204,9 +142,8 @@ object Dedup {
     * h_i(x) = (a_i·(x mod P) + b_i) mod P over the Mersenne prime P=2^31−1 —
     * pure integer arithmetic both engines evaluate identically, so the WHOLE
     * LSH pipeline (signatures → 4×2 banding → candidate pairs → exact
-    * Jaccard verify) is DuckDB-oracle hash-checkable, where the production
-    * q27 path (xxhash64 signatures, Spark-native) is rows-only by nature.
-    * Same scale shape as [[minHashPairs]]: narrow signature map (served
+    * Jaccard verify) is DuckDB-oracle hash-checkable (xxhash64 signatures
+    * would be Spark-only). Scale shape: narrow signature map (served
     * from the shared [[portableSigs]] frame), band-bucket join,
     * candidate-only shingle re-join. The intermediates stay well inside
     * 64-bit: a_i·(x mod P) < 2^27·2^31 = 2^58. */
@@ -292,60 +229,14 @@ object Dedup {
 
   // ---------------------------------------------------------------- SimHash
 
-  /** doc_id + 64-bit SimHash fingerprint.
-    *
-    * Computed by the native [[graft.plans.SimHash64]] expression — one fused
-    * bit-count loop per document, no explode, no shuffle. Identical output
-    * to [[graft.functions.TextFunctions.simHash]] (HOF reference) and to the
-    * earlier explode + 64-conditional-sum aggregate plan; parity is asserted
-    * in DedupSpec. Docs with no shingles are dropped (NULL fingerprint). */
-  def simHashes(docs0: DataFrame, shingleLen: Int = 3): DataFrame = {
-    val docs = graft.Tables.parallelized(docs0)
-    docs.select(col("doc_id"),
-        call_function("simhash64", T.shingleHashes(col("text"), shingleLen))
-          .as("simhash"))
-      .filter(col("simhash").isNotNull)
-  }
-
-  /** Near-dup pairs by Hamming distance ≤ maxHamming, found via 8×8-bit band
-    * buckets (a pair within Hamming 7 of a 64-bit hash must agree exactly on
-    * at least one of 8 bands — pigeonhole). */
-  def simHashPairs(docs: DataFrame, maxHamming: Int = 6): DataFrame = {
-    // Not persisted: both legs of the band self-join shuffle the same
-    // canonical subplan on the same keys, so Catalyst's ReuseExchange
-    // computes the fingerprints once — cache-free, nothing to clean up in a
-    // long-lived session.
-    val hashed = simHashes(docs)
-    val bands = (0 until 8).map { j =>
-      struct(lit(j).as("band"),
-        shiftright(col("simhash"), j * 8).bitwiseAND(lit(0xffL)).as("bkey"))
-    }
-    val exploded = hashed.select(col("doc_id"), col("simhash"),
-        explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("simhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val l = exploded.select(col("band"), col("bkey"),
-      col("doc_id").as("doc_a"), col("simhash").as("sim_a"))
-    val r = exploded.select(col("band"), col("bkey"),
-      col("doc_id").as("doc_b"), col("simhash").as("sim_b"))
-    // Hamming-filter BEFORE pair dedup: the filter is a codegen'd per-row
-    // bit_count on columns already in hand, so running it first shrinks the
-    // dedup shuffle from every band collision (~buckets × bucket²/2 rows) to
-    // just the near-duplicate pairs. Identical output — hamming is a pure
-    // function of the pair, so duplicates agree with their survivors.
-    l.join(r, Seq("band", "bkey")).filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select("doc_a", "doc_b", "hamming")
-      .dropDuplicates("doc_a", "doc_b")
-  }
-
-  /** doc_id + 60-bit ENGINE-PORTABLE SimHash fingerprint: the same one-loop
-    * native shape as [[simHashes]] ([[graft.plans.PortableSimHash60]] over
-    * [[graft.plans.PortableShingleHashes]]), but every bit derives from md5
-    * arithmetic a DuckDB oracle replays verbatim — the q99 portability move
-    * applied to SimHash (md5-derived bit weights, r11 VERDICT #1). Distinct
-    * shingles, mirroring the portable MinHash family's set semantics. */
+  /** doc_id + 60-bit ENGINE-PORTABLE SimHash fingerprint: one fused native
+    * loop per document ([[graft.plans.PortableSimHash60]] over
+    * [[graft.plans.PortableShingleHashes]]) — no explode, no shuffle — and
+    * every bit derives from md5 arithmetic a DuckDB oracle replays verbatim
+    * — the q99 portability move applied to SimHash (md5-derived bit
+    * weights, r11 VERDICT #1). Distinct shingles, mirroring the portable
+    * MinHash family's set semantics. Docs with no shingles are dropped
+    * (NULL fingerprint). */
   def simHashesPortable(docs0: DataFrame, shingleLen: Int = 3): DataFrame = {
     val docs = graft.Tables.parallelized(docs0)
     docs.select(col("doc_id"),
@@ -652,7 +543,7 @@ object Dedup {
   /** Exact word-bigram Jaccard for a linear pair stream (adjacent doc_ids) —
     * the verification kernel of the dedup family, O(n) pairs so it scales and
     * stays DuckDB-oracle-checkable. Pair *discovery* at scale is MinHash's
-    * job (minHashPairs). */
+    * job ([[minHashPairsPortable]]). */
   def adjacentNgramJaccard(docs0: DataFrame, n: Int = 2): DataFrame = {
     val docs = graft.Tables.parallelized(docs0)
     // Docs with no n-grams (< n tokens) are dropped, not emitted as
@@ -691,11 +582,12 @@ object Dedup {
 
   // --------------------------------------------- embedding cosine near-dup
 
-  /** [[embeddingNearDups]] with ENGINE-PORTABLE randomness — the q159
-    * algebra as a pair-discovery operator: embeddings quantize to int64
-    * (⌊x·100⌋), the 63-bit arithmetic hyperplane signature
-    * ([[graft.plans.PortableHyperplaneSig]] — no JVM RNG anywhere) splits
-    * into bands, only band-colliding pairs are compared, and the verify
+  /** Embedding near-dup candidates via hyperplane-LSH buckets with
+    * ENGINE-PORTABLE randomness — the q159 algebra as a pair-discovery
+    * operator: embeddings quantize to int64 (⌊x·100⌋), the 63-bit
+    * arithmetic hyperplane signature ([[graft.plans.PortableHyperplaneSig]]
+    * — no JVM RNG anywhere) splits into bands, only band-colliding pairs
+    * are compared (corpus² never materializes), and the verify
     * kernel is the signed integer cos²-ppm score (dot²·1e6 div na·nb,
     * negated for obtuse pairs) — every step replayed bit-for-bit by the
     * DuckDB oracle (Extensions.q30Sql). Returns the top `k` candidate
@@ -769,28 +661,6 @@ object Dedup {
         graft.ann.PortableAnn.cosPpmScore("dot", "na", "nb"))
       .select("vec_a", "vec_b", "score_x1e6")
       .orderBy(desc("score_x1e6"), col("vec_a"), col("vec_b"))
-      .limit(k)
-  }
-
-  /** Embedding near-dup candidates via random-hyperplane LSH buckets: only
-    * vectors sharing a bucket are compared (corpus² never materializes), then
-    * exact cosine ranks the candidates. Returns the top `k` candidate pairs
-    * by cosine (desc) — threshold-free so the operator is observable on any
-    * corpus. */
-  def embeddingNearDups(embs0: DataFrame, dim: Int, bits: Int = 8,
-      seed: Long = 42L, k: Int = 20): DataFrame = {
-    val embs = graft.Tables.parallelized(embs0)
-    val sig = embs.select(col("vec_id"), col("embedding"),
-      V.hyperplaneSignature(col("embedding"), dim, bits, seed).as("bucket"))
-    val a = sig.select(col("bucket"),
-      col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
-    val b = sig.select(col("bucket"),
-      col("vec_id").as("vec_b"), col("embedding").as("emb_b"))
-    a.join(b, Seq("bucket")).filter(col("vec_a") < col("vec_b"))
-      .withColumn("cos_x1e6",
-        floor(V.cosine(col("emb_a"), col("emb_b")) * 1000000.0))
-      .select("vec_a", "vec_b", "cos_x1e6")
-      .orderBy(desc("cos_x1e6"), col("vec_a"), col("vec_b"))
       .limit(k)
   }
 }

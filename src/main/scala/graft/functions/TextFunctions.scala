@@ -9,10 +9,11 @@ import org.apache.spark.sql.types._
   * stats. Built from codegen'd native functions only — no UDFs — so every
   * operator scales as a narrow per-row map over the corpus.
   *
-  * Where a query must hash-match the DuckDB oracle, the implementations here
-  * deliberately stick to arithmetic both engines evaluate identically
-  * (length/replace counting instead of regex token classes, FLOOR'd integer
-  * outputs instead of double ROUND).
+  * The implementations deliberately stick to arithmetic the DuckDB oracle
+  * evaluates identically: every hash is md5-derived ([[hashBucket]],
+  * [[portableHash60]], [[portableShingleHashes]]), token counts use
+  * length/replace counting instead of regex token classes, and outputs are
+  * FLOOR'd integers instead of double ROUND.
   */
 object TextFunctions {
 
@@ -63,27 +64,6 @@ object TextFunctions {
       .otherwise(array().cast(ArrayType(StringType)))
   }
 
-  /** xxhash64 per word n-gram shingle, duplicates kept — feed for
-    * explode+aggregate paths where the aggregate enforces distinctness.
-    * Computed by the native [[graft.plans.ShingleHashesRaw]] one-loop
-    * expression; bit-identical to the HOF composition
-    * [[wordShingleHashesRawHof]] (asserted in DedupSpec), which stays as the
-    * parity reference. The HOF chain never enters codegen and its interpreted
-    * eval is JIT-bimodal — a pushed-down null filter re-evaluating it stalled
-    * single tasks for minutes on the sf0.1 bench. */
-  def wordShingleHashesRaw(text: Column, n: Int): Column =
-    call_function("shingle_hashes", text, lit(n))
-
-  /** The composed higher-order-function reference for
-    * [[wordShingleHashesRaw]] — parity oracle only; not used in query paths. */
-  def wordShingleHashesRawHof(text: Column, n: Int): Column =
-    transform(wordShinglesHof(text, n), s => xxhash64(s))
-
-  /** Distinct xxhash64 values of word n-gram shingles — the set MinHash and
-    * Jaccard verification operate on. */
-  def shingleHashes(text: Column, n: Int): Column =
-    array_distinct(wordShingleHashesRaw(text, n))
-
   /** Non-overlapping occurrence count of `word` as a whole token. Matches
     * the SQL formula (len(t)-len(replace(t,w,'')))/len(w) on both engines. */
   def occurrences(text: Column, word: String): Column = {
@@ -117,36 +97,6 @@ object TextFunctions {
     pick
   }
 
-  /** 64-bit SimHash over the doc's shingle hash set: bit b of the result is
-    * set iff Σ_shingles sign(bit b of xxhash64(shingle)) > 0. Computed as a
-    * single aggregate carrying a 64-long counter array. */
-  def simHash(shingles: Column): Column = {
-    val counts = aggregate(
-      shingles,
-      typedlit(Seq.fill(64)(0L)),
-      (acc, h) => zip_with(acc, bitsOf(h), (a, b) => a + b))
-    // pack via bitwise OR of per-position masks (no arithmetic → no ANSI
-    // overflow even at bit 63)
-    val masks = typedlit((0 until 64).map(b => 1L << b))
-    aggregate(
-      zip_with(counts, masks, (c, m) => when(c > 0, m).otherwise(lit(0L))),
-      lit(0L),
-      (acc, x) => acc.bitwiseOR(x))
-  }
-
-  /** ±1 per bit of a long hash, as a 64-element array (LSB first). The bit
-    * masks are compile-time literals so each element is a plain AND. */
-  private def bitsOf(h: Column): Column =
-    array((0 until 64).map { b =>
-      when(h.bitwiseAND(lit(1L << b)) =!= 0, lit(1L)).otherwise(lit(-1L))
-    }: _*)
-
-  /** Rolling fingerprint of the whole document over its shingle hash stream:
-    * fp' = xxhash64(fp, h) — an order-sensitive chain (unlike the min-hash),
-    * overflow-free under ANSI mode, deterministic across executors. */
-  def rollingFingerprint(shingleHashes: Column): Column =
-    aggregate(shingleHashes, lit(0L), (acc, h) => xxhash64(acc, h))
-
   /** Winnowing-style min-hash fingerprint: min over shingle hashes. */
   def minShingleHash(shingleHashes: Column): Column =
     array_min(shingleHashes)
@@ -179,8 +129,7 @@ object TextFunctions {
   /** Order-sensitive polynomial rolling fingerprint over a hash stream:
     * fp' = (fp·31 + h mod M) mod M, M = 1e9+7 — plain 64-bit-safe modular
     * arithmetic both engines fold identically (DuckDB:
-    * `list_reduce(list_prepend(0, hs), (acc,h) -> ...)`), unlike the
-    * xxhash64 chain in [[rollingFingerprint]]. */
+    * `list_reduce(list_prepend(0, hs), (acc,h) -> ...)`). */
   def portableRollingFp(hashes: Column): Column =
     aggregate(hashes, lit(0L),
       (acc, h) => (acc * lit(31L) + h % lit(RollMod)) % lit(RollMod))

@@ -1,19 +1,18 @@
 package graft.functions
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Dense-vector math over `ArrayType(FloatType)` columns.
   *
-  * The production entry points ([[cosine]], [[hyperplaneSignature]]) compile
-  * to the native Catalyst expressions in [[graft.plans.VectorExpressions]] —
-  * one fused primitive loop per row inside whole-stage codegen. The
-  * higher-order-function forms ([[cosineHof]], [[hyperplaneSignatureHof]])
-  * are kept as the independently-derived reference implementation: they
-  * evaluate per-element lambdas (interpreted, boxed) and exist so property
-  * tests can assert bit-parity between the two paths.
+  * The production entry point ([[cosine]]) compiles to the native
+  * `cosine_sim` Catalyst expression ([[graft.plans.CosineSimilarityFloat]])
+  * — one fused primitive loop per row inside whole-stage codegen. The
+  * higher-order-function form ([[cosineHof]]) is kept as the
+  * independently-derived reference implementation: it evaluates
+  * per-element lambdas (interpreted, boxed) and exists so property tests
+  * can assert bit-parity between the two paths.
   *
   * All accumulation is double-precision and strictly left-to-right over the
   * array in BOTH paths, which makes results bit-deterministic for a given row
@@ -26,13 +25,6 @@ object VectorFunctions {
     * function registry ([[graft.plans.GraftExtensions]]). */
   def cosine(a: Column, b: Column): Column =
     call_function("cosine_sim", a, b)
-
-  /** Random-hyperplane (SimHash-for-vectors) LSH signature: `bits` sign bits
-    * packed into a long (MSB-first), planes drawn from a fixed seed so bucket
-    * assignment is deterministic across runs and executors. Native codegen'd
-    * expression; the plane matrix is baked in at plan time. */
-  def hyperplaneSignature(vec: Column, dim: Int, bits: Int, seed: Long): Column =
-    call_function("hyperplane_sig", vec, lit(dim), lit(bits), lit(seed))
 
   // ------------------------------------------------------------ HOF forms
 
@@ -55,21 +47,5 @@ object VectorFunctions {
     val nb = norm(b)
     when(na === 0.0 || nb === 0.0, lit(null).cast(DoubleType))
       .otherwise(d / (na * nb))
-  }
-
-  /** Hyperplane signature via higher-order functions — reference
-    * implementation for parity tests: acc' = acc*2 + (vec·plane >= 0). */
-  def hyperplaneSignatureHof(vec: Column, dim: Int, bits: Int, seed: Long): Column = {
-    val flat = GraftExtensions.planeMatrix(dim, bits, seed)
-    val planes: Seq[Seq[Double]] =
-      (0 until bits).map(b => (0 until dim).map(j => flat(b * dim + j)))
-    val v = vec.cast(ArrayType(DoubleType))
-    aggregate(
-      typedlit(planes),
-      lit(0L),
-      (acc, plane) =>
-        acc * 2 + when(
-          aggregate(zip_with(v, plane, (x, w) => x * w), lit(0.0),
-            (s, t) => s + t) >= 0.0, lit(1L)).otherwise(lit(0L)))
   }
 }

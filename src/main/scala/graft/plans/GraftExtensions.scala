@@ -3,9 +3,9 @@ package graft.plans
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.IntegerType
 
-/** SparkSessionExtensions hook: registers the native vector expressions with
+/** SparkSessionExtensions hook: registers the native expressions with
   * the function registry, making them first-class on the SQL surface
   * (`SELECT cosine_sim(a, b) ...`) and reachable from the Column API via
   * `call_function`. Installed by [[graft.Engine.session]] via
@@ -19,18 +19,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (children: Seq[Expression]) => {
         require(children.length == 2, "cosine_sim(arrayA, arrayB)")
         CosineSimilarityFloat(children.head, children(1))
-      }))
-
-    // minhash_sig(shingleHashes, numPerms): numPerms must be a literal — the
-    // permutation count shapes the output array at plan time.
-    ext.injectFunction((
-      FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "minhash_sig"),
-      (children: Seq[Expression]) => children match {
-        case Seq(arr, Literal(numPerms: Int, IntegerType)) =>
-          MinHashSignature(arr, numPerms)
-        case _ => throw new IllegalArgumentException(
-          "minhash_sig(shingle_hashes, numPerms: int literal)")
       }))
 
     ext.injectFunction((
@@ -90,32 +78,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "portable_shingle_hashes(text, n: int literal)")
       }))
 
-    // shingle_hashes(text, n): n must be a literal — the window width is a
-    // plan-time constant baked into the compiled loop.
-    ext.injectFunction((
-      FunctionIdentifier("shingle_hashes"),
-      new ExpressionInfo(classOf[ShingleHashesRaw].getName, "shingle_hashes"),
-      (children: Seq[Expression]) => children match {
-        case Seq(text, Literal(n: Int, IntegerType)) =>
-          ShingleHashesRaw(text, n)
-        case _ => throw new IllegalArgumentException(
-          "shingle_hashes(text, n: int literal)")
-      }))
-
     ext.injectFunction((
       FunctionIdentifier("semdedup_closure"),
       new ExpressionInfo(classOf[SemDedupClosure].getName, "semdedup_closure"),
       (children: Seq[Expression]) => {
         require(children.length == 2, "semdedup_closure(members, pairs)")
         SemDedupClosure(children.head, children(1))
-      }))
-
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => {
-        require(children.length == 1, "simhash64(shingle_hashes)")
-        SimHash64(children.head)
       }))
 
     ext.injectFunction((
@@ -145,28 +113,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         require(children.length == 2, "adc_dist(codes, tables literal)")
         AdcDistance(children.head, children(1))
       }))
-
-    // hyperplane_sig(vec, dim, bits, seed): dim/bits/seed must be literals —
-    // the seeded plane matrix is derived at plan time and baked into the
-    // expression, so executors never re-derive it.
-    ext.injectFunction((
-      FunctionIdentifier("hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSignature].getName, "hyperplane_sig"),
-      (children: Seq[Expression]) => children match {
-        case Seq(vec, Literal(dim: Int, IntegerType), Literal(bits: Int, IntegerType),
-            Literal(seed: Long, LongType)) =>
-          HyperplaneSignature(vec, dim, bits, seed)
-        case _ => throw new IllegalArgumentException(
-          "hyperplane_sig(vec, dim: int literal, bits: int literal, seed: long literal)")
-      }))
   }
 }
 
-object GraftExtensions {
-  /** The seeded plane matrix (bits×dim, row-major) — the single source shared
-    * by the native expression and the HOF reference path. */
-  def planeMatrix(dim: Int, bits: Int, seed: Long): Array[Double] = {
-    val rnd = new scala.util.Random(seed)
-    Array.fill(bits * dim)(rnd.nextGaussian())
-  }
-}

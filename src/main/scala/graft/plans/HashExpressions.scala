@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -16,241 +16,30 @@ private object HashElem {
   }
 }
 
-/** Native signature expressions for the dedup family.
+/** Native per-row expressions for the text-dedup and quantized-vector
+  * families: shingling, hashing, signatures, winnowing and integer dot
+  * products.
   *
-  * The composed alternative — `explode` the shingle-hash stream and fold it
-  * through a 64-column aggregate (`min(xxhash64(h, i))` per permutation /
-  * conditional ±1 sums per bit) — works, but it materializes |shingles| rows
-  * per document, runs 64 aggregate updates per shingle, and needs a full
-  * hash-partition SHUFFLE just to regroup what was already per-document data.
-  * These expressions compute the same signatures as a narrow per-row map:
-  * one fused loop per document, zero exchanges. On a 100 TB corpus that
-  * removes the largest shuffle of the MinHash pipeline entirely.
-  *
-  * Hashing is Spark's own XXH64 with the same seed-chaining as the
-  * `xxhash64(h, i)` SQL expression (seed 42, fold left), so signatures are
-  * bit-identical to the composed plan — asserted in DedupSpec.
+  * Higher-order functions never enter whole-stage codegen: a composed
+  * `transform`/`aggregate` chain bottoms out in interpreted, allocation-heavy
+  * per-element dispatch, and is re-evaluated wholesale when a downstream
+  * null filter is pushed into the scan. Measured on the sf0.1 fixture, a
+  * single task stuck on such a chain ran 60–180 s while 31 cores idled
+  * (JIT-luck bimodality). Each expression here is ONE compiled loop per row
+  * calling the same primitives the interpreted chain bottoms out in, so its
+  * output is bit-identical to the composed form (parity asserted in
+  * DedupSpec and TextVectorSpec) at a fraction of the cost.
   */
-
-/** MinHash signature: for permutation p, min over shingle hashes h of
-  * xxhash64(h, p). Returns array<long> of length `numPerms`; NULL for an
-  * empty shingle array (docs with no shingles have no signature — matching
-  * the explode-then-aggregate plan, where such docs vanish). Null elements
-  * are skipped. */
-case class MinHashSignature(child: Expression, numPerms: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "minhash_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HashElem.check(prettyName, child.dataType)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return null
-    val mins = Array.fill(numPerms)(Long.MaxValue)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val s1 = XXH64.hashLong(arr.getLong(i), 42L)
-        var p = 0
-        while (p < numPerms) {
-          // hashInt, not hashLong: the permutation index is an INT in the
-          // reference composition xxhash64(h, lit(i)), and XXH64 folds int
-          // and long inputs differently
-          val v = XXH64.hashInt(p, s1)
-          if (v < mins(p)) mins(p) = v
-          p += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(mins)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val xxh = classOf[XXH64].getName
-      val gad = classOf[GenericArrayData].getName
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val p = ctx.freshName("p")
-      val s1 = ctx.freshName("s1")
-      val v = ctx.freshName("v")
-      val mins = ctx.freshName("mins")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $mins = new long[$numPerms];
-         |  java.util.Arrays.fill($mins, Long.MAX_VALUE);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i)) continue;
-         |    long $s1 = $xxh.hashLong($a.getLong($i), 42L);
-         |    for (int $p = 0; $p < $numPerms; $p++) {
-         |      long $v = $xxh.hashInt($p, $s1);
-         |      if ($v < $mins[$p]) $mins[$p] = $v;
-         |    }
-         |  }
-         |  ${ev.value} = new $gad($mins);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** 64-bit SimHash over a (distinct) shingle-hash array: bit b of the result
-  * is set iff Σ_h sign(bit b of h) > 0. NULL for an empty array (matching the
-  * explode-then-aggregate plan). Null elements are skipped. */
-case class SimHash64(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def prettyName: String = "simhash64"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    HashElem.check(prettyName, child.dataType)
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n == 0) return null
-    val counts = new Array[Long](64)
-    var i = 0
-    while (i < n) {
-      if (!arr.isNullAt(i)) {
-        val h = arr.getLong(i)
-        var b = 0
-        while (b < 64) {
-          counts(b) += (if (((h >>> b) & 1L) == 1L) 1L else -1L)
-          b += 1
-        }
-      }
-      i += 1
-    }
-    var acc = 0L
-    var b = 0
-    while (b < 64) { if (counts(b) > 0) acc |= (1L << b); b += 1 }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val b = ctx.freshName("b")
-      val h = ctx.freshName("h")
-      val acc = ctx.freshName("acc")
-      val counts = ctx.freshName("counts")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n == 0) {
-         |  ${ev.isNull} = true;
-         |} else {
-         |  long[] $counts = new long[64];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i)) continue;
-         |    long $h = $a.getLong($i);
-         |    for (int $b = 0; $b < 64; $b++) {
-         |      $counts[$b] += ((($h >>> $b) & 1L) == 1L) ? 1L : -1L;
-         |    }
-         |  }
-         |  long $acc = 0L;
-         |  for (int $b = 0; $b < 64; $b++) {
-         |    if ($counts[$b] > 0) $acc |= (1L << $b);
-         |  }
-         |  ${ev.value} = $acc;
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/** Raw word-n-gram shingle hashes of a text column, duplicates kept, in
-  * document order — the native twin of
-  * `transform(wordShingles(text, n), xxhash64)` and the input feed for
-  * [[MinHashSignature]]/[[SimHash64]].
-  *
-  * Why native: higher-order functions never enter whole-stage codegen, so the
-  * HOF composition bottoms out in `ArrayTransform.eval` → `ConcatWs.eval` →
-  * per-element `ClassTag`/`ArrayDataIndexedSeq` dispatch — an allocation-heavy
-  * interpreted loop that is also re-evaluated wholesale when a downstream
-  * null-filter is pushed into the scan. Measured on the sf0.1 fixture, a
-  * single task stuck on that path ran 60–180 s while 31 cores idled (JIT-luck
-  * bimodality). This expression is ONE compiled loop per row calling the same
-  * primitives the interpreted chain bottoms out in — `UTF8String.split`,
-  * `UTF8String.concatWs`, `XxHash64Function.hash` — so the output is
-  * bit-identical (asserted in DedupSpec) at a fraction of the cost, and the
-  * whole dedup-family pipeline stays inside codegen.
-  *
-  * Null propagation: a NULL text yields NULL (standard unary semantics); the
-  * HOF composition yields an empty array instead. Identical downstream — both
-  * produce NULL signatures that the dedup pipelines filter — and the fixture
-  * corpus has no NULL texts; documented for parity-spec scoping. */
-case class ShingleHashesRaw(child: Expression, n: Int) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "shingle_hashes"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got ${other.simpleString(10)}")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleHashesRaw.compute(
-      input.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a =>
-      s"${ev.value} = graft.plans.ShingleHashesRaw.compute($a, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object ShingleHashesRaw {
-  import org.apache.spark.unsafe.types.UTF8String
-  private val Space = UTF8String.fromString(" ")
-
-  /** One tight loop per document. Calls the exact primitives the reference
-    * HOF chain uses — `split(" ", -1)` (trailing empties kept, as in
-    * `functions.split`), `concatWs`, and the interpreted xxhash64 entry point
-    * (seed 42) — so results are bit-identical to the composed plan. */
-  def compute(text: UTF8String, n: Int): ArrayData = {
-    val words = text.split(Space, -1)
-    if (words.length < n) return new GenericArrayData(Array.emptyLongArray)
-    val out = new Array[Long](words.length - n + 1)
-    val window = new Array[UTF8String](n)
-    var i = 0
-    while (i < out.length) {
-      var j = 0
-      while (j < n) { window(j) = words(i + j); j += 1 }
-      val sh = UTF8String.concatWs(Space, window: _*)
-      out(i) = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-        .hash(sh, StringType, 42L)
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-}
 
 /** Word n-gram shingle STRINGS (space-joined, duplicates kept, document
   * order) — the native twin of the `transform(sequence, concat_ws(slice))`
   * HOF composition in `TextFunctions.wordShinglesHof`, for the query paths
   * that need the passage text itself (n-gram Jaccard, decontamination,
-  * duplicated-passage detection) rather than its hash. Same motivation and
-  * same null semantics note as [[ShingleHashesRaw]]. */
+  * duplicated-passage detection) rather than its hash.
+  *
+  * Null propagation: a NULL text yields NULL (standard unary semantics); the
+  * HOF composition yields an empty array instead. The fixture corpus has no
+  * NULL texts; documented for parity-spec scoping. */
 case class WordShingles(child: Expression, n: Int) extends UnaryExpression {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
@@ -296,26 +85,19 @@ object WordShingles {
   }
 }
 
-/** Exact integer dot product of two array<bigint> columns (Σ a_i·b_i over
-  * the common prefix, null elements skipped pairwise) — the compiled kernel
-  * under the quantized-similarity family (q110's all-pairs scan evaluates it
-  * once per PAIR, where the zip_with/aggregate HOF composition it replaces
-  * would run interpreted — the same JIT-bimodal hazard [[ShingleHashesRaw]]
-  * removes from the shingle family). Returns NULL if either side is NULL. */
 /** The q159 portable 63-bit hyperplane signature as one fused native loop:
   * bit t (t = 0..62) is [Σ_j v[j]·c(t,j) ≥ 0] with arithmetic plane
   * coefficients c(t,j) = ((1299709·(t·dim+j) + 15485863) mod 1000003) −
   * 500001 — the integer algebra the DuckDB oracle replays verbatim (the
-  * q99 portability pattern: no JVM RNG anywhere, unlike
-  * [[HyperplaneSignature]]'s seeded plane matrix). The composed
+  * q99 portability pattern: no JVM RNG anywhere). The composed
   * nested-HOF form (aggregate over sequence(0,62) of an indexed transform)
   * is interpreted per row per bit; this loop runs 63·dim fused
   * multiply-accumulates in codegen with the coefficient computed inline —
   * no plane matrix in memory at all. Bit-parity with the HOF composition is
   * asserted in TextVectorSpec.
   *
-  * Degenerate inputs (empty array, any null element) yield 0L — the
-  * [[HyperplaneSignature]] convention. (The HOF composition maps an EMPTY
+  * Degenerate inputs (empty array, any null element) yield 0L. (The HOF
+  * composition maps an EMPTY
   * array to all-ones instead — its aggregate seed 0 satisfies every
   * `≥ 0` test — and DuckDB's empty `list_sum` is NULL, so 0L is also the
   * only cross-engine-consistent choice; q159 filters zero-norm vectors
@@ -364,6 +146,11 @@ object PortableHyperplaneSig {
   }
 }
 
+/** Exact integer dot product of two array<bigint> columns (Σ a_i·b_i over
+  * the common prefix, null elements skipped pairwise) — the compiled kernel
+  * under the quantized-similarity family (q110's all-pairs scan evaluates it
+  * once per PAIR, where the zip_with/aggregate HOF composition it replaces
+  * would run interpreted). Returns NULL if either side is NULL. */
 case class DotProductLong(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
 
@@ -596,7 +383,7 @@ object IntersectCountLong {
   * that feeds the cross-engine-checkable dedup/fingerprint paths (q99, q35):
   * the value of each element is the first 60 bits of the MD5 of the shingle's
   * UTF-8 bytes, exactly what DuckDB's `CAST('0x'||substr(md5(s),1,15) AS
-  * BIGINT)` computes. Same interpreted-HOF motivation as [[ShingleHashesRaw]];
+  * BIGINT)` computes. Same interpreted-HOF motivation as [[WordShingles]];
   * here the per-shingle MD5 makes the interpreted chain (string build + hex
   * format + base-16 re-parse) even heavier, so the native loop digests the
   * shingle bytes and folds the leading 7.5 bytes directly — no hex string at
@@ -664,17 +451,17 @@ object PortableShingleHashes {
   }
 }
 
-/** 60-bit SimHash over the md5-60-bit shingle-hash array — the
-  * engine-portable twin of [[SimHash64]] (q28's cross-engine gate, the same
-  * portability move [[PortableHyperplaneSig]] makes for q159): bit t
+/** 60-bit SimHash over the md5-60-bit shingle-hash array — q28's
+  * cross-engine fingerprint (the same portability move
+  * [[PortableHyperplaneSig]] makes for q159): bit t
   * (t = 0..59) of the result is set iff Σ_h sign(bit t of h) > 0, where the
   * h are [[PortableShingleHashes]] values both engines compute identically,
   * so a DuckDB oracle replays the ENTIRE fingerprint from the raw text.
   * 60 bits (not 64) because the portable hash itself is 60 bits — a signed
   * 64-bit value in either engine, never negative, so `>>`/`&`/`xor`
   * band-and-Hamming arithmetic agrees with no unsigned-shift caveats.
-  * Conventions mirror [[SimHash64]]: NULL for an empty array, null elements
-  * skipped, strict `> 0` majority per bit. */
+  * NULL for an empty array (docs with no shingles have no fingerprint),
+  * null elements skipped, strict `> 0` majority per bit. */
 case class PortableSimHash60(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

@@ -6,10 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native expressions for the product-quantization hot path (`ann/Pq`).
+/** Native expressions for the product-quantization hot path (the PQ and
+  * IVF-PQ serves in [[graft.ann.PortableAnn]]).
   *
   * The composed form of the PQ encoder is one `transform`+`aggregate` lambda
-  * pair per (subspace × code) — m·k = 256 nested HOF subtrees at the default
+  * pair per (subspace × code) — m·k = 256 nested HOF subtrees at a
   * 16×16 config. That tree is not just slow to EXECUTE (boxed per-element
   * lambdas outside codegen), it is slow to PLAN: analysis + optimization of
   * the 256-lambda tree cost seconds per Lloyd iteration regardless of data

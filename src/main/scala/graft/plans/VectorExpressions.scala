@@ -1,23 +1,23 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Native Catalyst expressions for the embedding hot path.
+/** Native Catalyst expression for the float-embedding hot path.
   *
   * The composed alternative (`zip_with`/`aggregate` higher-order functions,
   * kept in [[graft.functions.VectorFunctions]] as the reference
   * implementation) evaluates one lambda call per element outside
   * whole-stage codegen. For a 64-dim cosine that is ~192 boxed lambda
-  * invocations per row; these expressions compile to a single fused primitive
+  * invocations per row; this expression compiles to a single fused primitive
   * loop inside the generated code — the "native Expression beats UDF beats
-  * HOF" preference order of the extension brief. Both carry an interpreted
-  * `nullSafeEval` with identical semantics, so they work in
-  * interpreted-fallback paths and property tests verify bit-parity with the
-  * HOF forms.
+  * HOF" preference order of the extension brief. It carries an interpreted
+  * `nullSafeEval` with identical semantics, so it works in
+  * interpreted-fallback paths and a property test verifies bit-parity with
+  * the HOF form.
   */
 
 /** Per-side primitive accessor: both float and double element types are
@@ -118,84 +118,4 @@ case class CosineSimilarityFloat(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Random-hyperplane LSH signature: `bits` sign bits of plane·vec packed into
-  * a long, MSB-first. The plane matrix (bits×dim, flattened row-major) is
-  * derived lazily from (dim, bits, seed) — keeping the case-class fields
-  * scalar preserves structural equality between independently built
-  * instances, so common-subexpression elimination and exchange reuse see
-  * identical signature expressions as equal (an Array field would compare by
-  * reference and defeat both). One multiply-accumulate loop in codegen, no
-  * per-plane lambda evaluation.
-  *
-  * Degenerate inputs (length != dim, or any null element) yield signature 0 —
-  * the same value the HOF composition produces, since every per-plane dot
-  * goes null and each `when(null >= 0)` bit falls to 0. */
-case class HyperplaneSignature(child: Expression, dim: Int, bits: Int,
-    seed: Long)
-    extends UnaryExpression {
-
-  @transient private lazy val planes: Array[Double] =
-    GraftExtensions.planeMatrix(dim, bits, seed)
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hyperplane_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    VectorElem.check(prettyName, child.dataType)
-
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    if (v.numElements() != dim) return 0L
-    var i = 0
-    while (i < dim) { if (v.isNullAt(i)) return 0L; i += 1 }
-    var acc = 0L
-    var b = 0
-    while (b < bits) {
-      var s = 0.0
-      val base = b * dim
-      var j = 0
-      while (j < dim) {
-        s += planes(base + j) * VectorElem.read(child.dataType, v, j); j += 1
-      }
-      acc = acc * 2L + (if (s >= 0.0) 1L else 0L)
-      b += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[]")
-    nullSafeCodeGen(ctx, ev, v => {
-      val acc = ctx.freshName("acc")
-      val b = ctx.freshName("b")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val ok = ctx.freshName("ok")
-      val getV = VectorElem.genGet(child.dataType, v, j, "hyperplane_sig input")
-      s"""
-         |boolean $ok = ($v.numElements() == $dim);
-         |for (int $j = 0; $ok && $j < $dim; $j++) {
-         |  if ($v.isNullAt($j)) $ok = false;
-         |}
-         |long $acc = 0L;
-         |if ($ok) {
-         |  for (int $b = 0; $b < $bits; $b++) {
-         |    double $s = 0.0;
-         |    int $base = $b * $dim;
-         |    for (int $j = 0; $j < $dim; $j++) {
-         |      $s += $planesRef[$base + $j] * $getV;
-         |    }
-         |    $acc = $acc * 2L + ($s >= 0.0 ? 1L : 0L);
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

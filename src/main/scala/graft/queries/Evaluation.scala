@@ -901,7 +901,7 @@ object Evaluation {
   /** q204 int8 quantization calibration table — the per-dimension range
     * audit that precedes serving an embedding table at 100 TB: symmetric
     * int8 quantization (the standard ANN-memory trade, the disk format
-    * `ann/Pq` compresses further) needs one scale per dimension, and a
+    * PQ compresses further) needs one scale per dimension, and a
     * per-tensor scale silently crushes narrow dimensions. Per dimension of
     * the ×1000-quantized coordinates (the q151/q168 grid): min, max,
     * absolute max, the derived int8 step in micro-units
@@ -1122,8 +1122,8 @@ object Evaluation {
     * sign derived from md5("rp<band>:<bit>:<dim>") — PORTABLE pseudo-
     * randomness (the q99 md5-minhash discipline applied to hyperplanes),
     * so DuckDB rebuilds the identical hyperplanes from the same strings
-    * and the whole blocked audit is hash-checkable, unlike the seeded
-    * q30/q32 signatures. Signs are data-independent constants: computed
+    * and the whole blocked audit is hash-checkable, unlike a JVM-seeded
+    * plane matrix. Signs are data-independent constants: computed
     * once driver-side, shipped as 24 array literals into a codegen'd
     * `dot_i64` each — no per-row hashing on the Spark side at all. */
   private[queries] val LshBands = 4

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Tables
-import graft.ann.{Knn, Pq}
+import graft.ann.Knn
 import graft.dedup.Dedup
 import graft.functions.{TextFunctions => T}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -33,9 +33,7 @@ object Extensions {
     * 0.80). Re-keyed on the PORTABLE Carter-Wegman permutations (r11
     * VERDICT #1): every random bit derives from md5 + fixed integer maps, so
     * the DuckDB oracle replays the whole pipeline and q27 graduates from
-    * rows-only to the hash gate. The xxhash64 native-signature variant
-    * ([[Dedup.minHashPairs]], 64 perms fused in one codegen loop) remains
-    * the maximal-codegen alternative, spec-covered in DedupSpec. */
+    * rows-only to the hash gate. */
   def q27(spark: SparkSession, dir: String): DataFrame =
     Dedup.minHashPairsPortable(spark, dir, minJaccardX1e6 = 700000L)
       .orderBy("doc_a", "doc_b")
@@ -52,8 +50,7 @@ object Extensions {
     * cutoff (r12 VERDICT #1: dense compound-key buckets are near-dup
     * CLUSTERS routed to the q58/q131 connected-components pass; the
     * pairwise operator emits pairs discoverable through ≥ 1 sparse
-    * bucket). The 64-bit xxhash64 variant ([[Dedup.simHashPairs]]) stays
-    * spec-covered in DedupSpec. */
+    * bucket). */
   def q28(spark: SparkSession, dir: String): DataFrame =
     Dedup.simHashPairsPortable(Tables.load(spark, dir, "documents"))
       .orderBy("doc_a", "doc_b")
@@ -313,8 +310,7 @@ object Extensions {
     * are pure integer algebra, so the DuckDB oracle replays the whole
     * pipeline — corpus-adaptive band width, dense-bucket cutoff, and
     * banding included (see [[Dedup.embeddingNearDupsPortable]] for the ×30
-    * scale rationale behind both knobs). The JVM-seeded variant
-    * ([[Dedup.embeddingNearDups]]) stays spec-covered in DedupSpec. */
+    * scale rationale behind both knobs). */
   def q30(spark: SparkSession, dir: String): DataFrame =
     Dedup.embeddingNearDupsPortable(Tables.load(spark, dir, "embeddings"))
 
@@ -426,8 +422,7 @@ object Extensions {
     * since r12 (r11 VERDICT #1): candidates are the vectors sharing ≥ 1 of
     * the query's 9 signature bands (the multi-probe analog), ranked by the
     * signed integer cos²-ppm score, every step replayed by the DuckDB
-    * oracle. The JVM-seeded multi-probe variant ([[Knn.lshTopK]]) stays
-    * spec-covered in AnnSpec. */
+    * oracle. */
   def q32(spark: SparkSession, dir: String): DataFrame =
     Knn.lshTopKPortable(Tables.load(spark, dir, "embeddings"),
       queryId = 0L, k = 10)
@@ -463,8 +458,7 @@ object Extensions {
     * SERVE bit-for-bit (the Lloyd iterations are unrolled CTEs). Served
     * through the fingerprint-keyed model registry (ann/Models): centroids
     * train once per corpus, every query pays only the narrow assignment +
-    * probe scan. The float variant ([[Knn.ivfTrain]]/[[Knn.ivfTopKWith]])
-    * stays spec-covered in AnnSpec with recall floors. */
+    * probe scan. */
   def q49(spark: SparkSession, dir: String): DataFrame = {
     val embs = Tables.load(spark, dir, "embeddings")
     // latest-stamp registry: a regenerated corpus retrains AND releases the
@@ -572,8 +566,7 @@ object Extensions {
     * corpus-sized shuffles. The DuckDB oracle replays training, encoding,
     * ADC, and re-rank bit-for-bit. Codebooks come from the
     * fingerprint-keyed model registry (ann/Models): trained once per
-    * corpus, served from memory after. The float variant ([[Pq.pqTrain]]/
-    * [[Pq.pqTopKWith]]) stays spec-covered in AnnSpec. */
+    * corpus, served from memory after. */
   def q80(spark: SparkSession, dir: String): DataFrame = {
     val embs = Tables.load(spark, dir, "embeddings")
     val cbs = graft.ann.Models.cachedLatest[Array[Array[Array[Long]]]](
@@ -740,8 +733,7 @@ object Extensions {
     * (PartitionFilters on cid, asserted in AnnSpec), so the measured
     * steady-state is the deployment serve path AND the DuckDB oracle
     * replays coarse training, residual codebook training, encoding, ADC,
-    * and re-rank bit-for-bit. The float variant (ann/IvfPq + IvfPqIndex)
-    * stays spec-covered in AnnSpec with recall floors. */
+    * and re-rank bit-for-bit. */
   def q103(spark: SparkSession, dir: String): DataFrame = {
     val embs = Tables.load(spark, dir, "embeddings")
     val idx = graft.ann.PortableIvfPqIndex.ensureBuilt(spark, embs, dir,

@@ -1163,11 +1163,8 @@ object Retrieval {
     * source) projection — pushed-down scan columns, candidates ∝ the
     * filter's selectivity, distance work only on survivors; the query
     * vector is a 1-row broadcast; the cut is TakeOrderedAndProject(10).
-    * At IVF scale the same pre-filter is BUILT into the serve path —
-    * [[graft.ann.Knn.ivfTopKFiltered]] semi-joins the gate into the
-    * probed lists before any cosine (AnnSpec: hard gate + recall floor
-    * vs the filtered exact ranking); this query is its exact-kernel
-    * verify shape. */
+    * An IVF serve would take the same pre-filter by semi-joining the gate
+    * into the probed lists before any distance work. */
   def q237(spark: SparkSession, dir: String): DataFrame = {
     val q = Tables.parallelized(Tables.load(spark, dir, "embeddings"))
       .select(col("vec_id"),
@@ -1660,7 +1657,7 @@ object Retrieval {
       // unconditional), so outer semantics are identical — but the non-outer
       // generator makes InferFiltersFromGenerate push a size()>0 filter into
       // the scan that RE-EVALUATES the whole interpreted boundary chain per
-      // row (the shingle_hashes double-eval trap, measured 2x here)
+      // row (the interpreted-HOF double-eval trap, measured 2x here)
       .select(col("doc_id"), col("w"), col("starts"),
         posexplode_outer(col("starts")).as(Seq("idx", "start")))
       .withColumn("end",

@@ -1046,9 +1046,8 @@ object Training {
     * the DuckDB oracle replays the ENTIRE pipeline (banding included), not
     * just row counts — and it is native: `portable_hyperplane_sig` runs the
     * 63×dim multiply-accumulate as one codegen'd loop with the coefficients
-    * computed inline (the seeded-plane `hyperplane_sig` of q30 stays for
-    * callers that don't need oracle replay; its JVM RNG is exactly what an
-    * external engine cannot reproduce). Scale shape: the band explode is
+    * computed inline (a JVM-seeded plane matrix is exactly what an external
+    * engine cannot reproduce). Scale shape: the band explode is
     * 9 slim rows per vector, candidates dedup to (label, id_a, id_b) before
     * the two corpus hash-joins fetch vectors, and the verify kernel is the
     * codegen'd `dot_i64`. */
@@ -2028,8 +2027,8 @@ object Training {
     * by a union and collapsed by ONE map-combining max-flag aggregate
     * keyed by the batch doc; the final rollup is |sources| cells. In a
     * real deployment the existing side's band keys come from the persisted
-    * signature index (the IvfPqIndex discipline) — here both sides derive
-    * from the shared corpus-stamped signature frame. */
+    * signature index (the PortableSigStore discipline) — here both sides
+    * derive from the shared corpus-stamped signature frame. */
   def q185(spark: SparkSession, dir: String): DataFrame = {
     val docs = Dedup.portableSigs(spark, dir)
       .select(col("doc_id"), col("source"),

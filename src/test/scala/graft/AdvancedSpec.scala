@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.AsOfJoin
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Semantics of the Advanced query set's operators on literal inputs —

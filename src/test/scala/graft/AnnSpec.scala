@@ -1,11 +1,12 @@
 package graft
 
-import graft.ann.{IvfPq, Knn, PortableAnn, Pq}
+import graft.ann.{Knn, PortableAnn}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ANN quality: the approximate paths must return k rows and substantially
-  * agree with the exact brute-force ranking (recall), since their outputs are
-  * seeded/float-order dependent and not hash-checkable against DuckDB. */
+/** ANN quality: the approximate serves must return k rows and substantially
+  * agree with the exact ranking (recall floors), and their building blocks
+  * must hold the contracts the DuckDB oracle replay relies on (trainer
+  * shapes, native-vs-HOF parity, tie rules, index lifecycle). */
 class AnnSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
@@ -34,7 +35,7 @@ class AnnSpec extends AnyFunSuite {
   }
 
   test("portable LSH top-k: k rows, an exact duplicate of the query ranks first at score 1e6") {
-    import org.apache.spark.sql.functions.{col, lit, when, transform => tf}
+    import org.apache.spark.sql.functions.{col, lit}
     // clone the query vector onto a fresh id — the serve must surface it
     // first with the exact integer score 1.0 (ppm), since quantization and
     // scoring are deterministic integer algebra
@@ -48,8 +49,8 @@ class AnnSpec extends AnyFunSuite {
     assert(out.head == ((cloneId, 1000000L)), out.toSeq.toString)
     // recall vs exact on the unmodified corpus: this synthetic fixture's
     // nearest neighbors are only weakly similar (cos ≈ 0.3), where ANY
-    // banded LSH has probabilistic recall — same floor discipline as the
-    // seeded lshTopK test (overlap, not majority)
+    // banded LSH has probabilistic recall — a floor on overlap, not a
+    // majority
     val portable = topIds(Knn.lshTopKPortable(embs, queryId = 0L, k = 10))
     val recall = (portable & exact).size
     assert(recall >= 2, s"portable LSH recall too low: $recall/10")
@@ -64,145 +65,6 @@ class AnnSpec extends AnyFunSuite {
     val top = graft.dedup.Dedup.embeddingNearDupsPortable(withClone, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(top.head == ((7L, cloneId, 1000000L)), top.toSeq.toString)
-  }
-
-  test("IVF top-10: k rows, recall vs brute force >= 0.5") {
-    val ivf = topIds(Knn.ivfTopK(embs, q, excludeId = 0L, k = 10,
-      nClusters = 8, nProbe = 3))
-    assert(ivf.size == 10)
-    val recall = (ivf & exact).size
-    assert(recall >= 5, s"IVF recall too low: $recall/10 (ivf=$ivf exact=$exact)")
-  }
-
-  test("filtered IVF serve: hard gate honored, k filled, recall vs filtered exact >= 0.5") {
-    import org.apache.spark.sql.functions.col
-    // metadata gate: even vec_ids only (a ~50%-selective relational filter)
-    val allowed = embs.select(col("vec_id")).filter(col("vec_id") % 2 === 0)
-    val allowedSet = allowed.collect().map(_.getLong(0)).toSet
-    val cents = Knn.ivfTrain(embs, nClusters = 8, iters = 2)
-    val got = Knn.ivfTopKFiltered(embs, cents, q, excludeId = 0L, k = 10,
-      nProbe = 3, allowed = allowed).collect().map(_.getLong(0))
-    assert(got.length == 10, "the filtered probe set must still fill k")
-    assert(got.forall(allowedSet), "a hit escaped the metadata gate") // HARD
-    // recall vs the exact ranking over the SAME gated universe
-    val exactFiltered = topIds(Knn.bruteForce(
-      embs.join(allowed, Seq("vec_id"), "left_semi"), q, excludeId = 0L, k = 10))
-    val recall = (got.toSet & exactFiltered).size
-    assert(recall >= 5,
-      s"filtered recall too low: $recall/10 (got=${got.toSet} exact=$exactFiltered)")
-    // pre-filter beats post-filter: the unfiltered top-10 post-filtered to
-    // the gate loses qualifying neighbors the filtered serve keeps
-    assert((exact & allowedSet).size < 10 ||
-      (exact & allowedSet) == got.toSet,
-      "post-filtering should come up short or agree exactly")
-  }
-
-  test("filtered IVF serve widens probing under a selective gate: recall >= 0.8") {
-    import org.apache.spark.sql.functions.col
-    // a 10%-selective gate: fixed nProbe=1 would see only a handful of
-    // qualifying candidates; the adaptive serve must widen until the gated
-    // pool covers >= 3k and recover the filtered exact ranking
-    val allowed = embs.select(col("vec_id")).filter(col("vec_id") % 10 === 0)
-    val allowedSet = allowed.collect().map(_.getLong(0)).toSet
-    val cents = Knn.ivfTrain(embs, nClusters = 8, iters = 2)
-    val got = Knn.ivfTopKFiltered(embs, cents, q, excludeId = 0L, k = 10,
-      nProbe = 1, allowed = allowed).collect().map(_.getLong(0))
-    assert(got.length == 10, "the widened probe set must fill k")
-    assert(got.forall(allowedSet), "a hit escaped the metadata gate")
-    val exactFiltered = topIds(Knn.bruteForce(
-      embs.join(allowed, Seq("vec_id"), "left_semi"), q, excludeId = 0L, k = 10))
-    val recall = (got.toSet & exactFiltered).size
-    assert(recall >= 8,
-      s"adaptive filtered recall too low: $recall/10 (got=${got.toSet} exact=$exactFiltered)")
-  }
-
-  test("IVF centroids: nClusters entries of the right dimensionality") {
-    val cents = Knn.ivfTrain(embs, nClusters = 8, iters = 2)
-    assert(cents.length == 8)
-    assert(cents.forall(_._2.length == 64))
-  }
-
-  test("IVF centroids: duplicate init vectors (empty clusters) still yield nClusters") {
-    import spark.implicits._
-    // vec 0..3 identical → cosine ties starve all but one of those clusters;
-    // the starved clusters must keep their previous vector, not vanish
-    val dup = (0L until 16L).map { i =>
-      val v = if (i < 4) Array(1.0f, 0f, 0f) else
-        Array(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat, 0.1f * i)
-      (i, v.toSeq)
-    }.toDF("vec_id", "embedding")
-    val cents = Knn.ivfTrain(dup, nClusters = 6, iters = 3, sampleMod = 1)
-    assert(cents.length == 6, s"got ${cents.length} centroids")
-    assert(cents.forall(_._2.length == 3))
-  }
-
-  test("IVF query path is a narrow map: zero shuffles in the plan") {
-    val df = Knn.ivfTopK(embs, q, excludeId = 0L, k = 10,
-      nClusters = 8, nProbe = 3)
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"IVF probe must not shuffle the corpus:\n$p")
-  }
-
-  test("LSH top-10: k rows and overlap with brute force") {
-    val lsh = topIds(Knn.lshTopK(embs, q, excludeId = 0L, k = 10, dim = 64))
-    assert(lsh.size == 10)
-    assert((lsh & exact).nonEmpty)
-  }
-
-  // exact L2 top-10 (PQ's ADC approximates L2, so its recall floor is
-  // measured against the L2 ranking, not the cosine one above)
-  lazy val exactL2: Set[Long] = {
-    val rows = embs.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    rows.filter(_._1 != 0L).map { case (id, v) =>
-      var d = 0.0; var i = 0
-      while (i < v.length) { val x = v(i) - q(i); d += x * x; i += 1 }
-      (id, d)
-    }.sortBy(x => (x._2, x._1)).take(10).map(_._1).toSet
-  }
-
-  test("PQ top-10: k rows, recall vs exact L2 >= 0.7") {
-    val pq = topIds(Pq.pqTopK(embs, q, excludeId = 0L, topK = 10, dim = 64))
-    assert(pq.size == 10)
-    val recall = (pq & exactL2).size
-    assert(recall >= 7, s"PQ recall too low: $recall/10 (pq=$pq exact=$exactL2)")
-  }
-
-  test("IVF-PQ top-10: k rows, recall vs exact L2 >= 0.6, probes only nProbe lists") {
-    // residual-PQ over nProbe of 8 lists sees a FRACTION of the corpus, so
-    // its floor sits between raw PQ (full-corpus ADC) and IVF-flat
-    val ivfpq = topIds(IvfPq.ivfPqTopK(embs, q, excludeId = 0L, topK = 10,
-      dim = 64, nClusters = 8, nProbe = 4))
-    assert(ivfpq.size == 10)
-    val recall = (ivfpq & exactL2).size
-    assert(recall >= 6, s"IVF-PQ recall too low: $recall/10 (ivfpq=$ivfpq exact=$exactL2)")
-  }
-
-  test("persisted IVF-PQ index: query from disk == direct path; probes prune partitions") {
-    val path = java.nio.file.Files.createTempDirectory("ivfpq_index").toString
-    val model = graft.ann.IvfPqIndex.build(spark, embs, path, dim = 64,
-      nClusters = 8)
-    // the saved model round-trips exactly
-    val loaded = graft.ann.IvfPqIndex.loadModel(spark, path)
-    assert(loaded.centroids.map(_._1).toSeq == model.centroids.map(_._1).toSeq)
-    assert(loaded.centroids.zip(model.centroids)
-      .forall { case ((_, a), (_, b)) => a.toSeq == b.toSeq })
-    assert(loaded.codebooks.flatten.flatten.toSeq ==
-      model.codebooks.flatten.flatten.toSeq)
-    // serving from the persisted index reproduces the direct in-flight path
-    // (training is deterministic, so both sides carry the same model)
-    val fromIndex = graft.ann.IvfPqIndex.query(spark, path, embs, q,
-      excludeId = 0L, topK = 10, dim = 64)
-    val direct = IvfPq.ivfPqTopK(embs, q, excludeId = 0L, topK = 10,
-      dim = 64, nClusters = 8)
-    assert(fromIndex.collect().map(_.toSeq).toSeq ==
-      direct.collect().map(_.toSeq).toSeq)
-    // the probed-list scan is partition-pruned on cid — the property that
-    // makes a billion-vector probe read m bytes/row of ONE list, not all
-    val codesScan = graft.ann.IvfPqIndex.codes(spark, path)
-      .filter(org.apache.spark.sql.functions.col("cid") === model.centroids.head._1)
-    val plan = codesScan.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(cid"), plan)
   }
 
   test("q103 registered query serves from the persisted portable index == in-flight path") {
@@ -238,16 +100,21 @@ class AnnSpec extends AnyFunSuite {
 
   // ------------------------------------------------- portable integer family
 
-  /** Exact signed cos²-ppm ranking over the quantized corpus, computed
+  private def embRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Array[Float])] =
+    df.select("vec_id", "embedding").collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toSeq
+
+  private def quant(v: Array[Float]): Array[Long] =
+    v.map(x => math.floor(x.toDouble * 100).toLong)
+
+  /** Exact signed cos²-ppm top-k over the quantized rows, computed
     * driver-side with the same integer algebra — the deterministic ground
-    * truth the portable serves approximate. */
-  lazy val exactPortable: Seq[Long] = {
-    val rows = embs.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    def quant(v: Array[Float]): Array[Long] =
-      v.map(x => math.floor(x.toDouble * 100).toLong)
-    val qv = quant(rows.find(_._1 == 0L).get._2)
+    * truth the portable IVF serve approximates. Ties → smaller id. */
+  private def exactCosPpmTop(rows: Seq[(Long, Array[Float])], queryId: Long,
+      k: Int): Seq[Long] = {
+    val qv = quant(rows.find(_._1 == queryId).get._2)
     val qn = qv.map(x => x * x).sum
-    rows.filter(_._1 != 0L)
+    rows.filter(_._1 != queryId)
       .map { case (id, v) =>
         val u = quant(v)
         val nu = u.map(x => x * x).sum
@@ -255,8 +122,22 @@ class AnnSpec extends AnyFunSuite {
         val mag = dot * dot * 1000000L / (nu * qn)
         (id, if (dot >= 0) mag else -mag)
       }
-      .sortBy { case (id, s) => (-s, id) }.take(10).map(_._1).toSeq
+      .sortBy { case (id, s) => (-s, id) }.take(k).map(_._1)
   }
+
+  /** Exact quantized-L2 top-k, the portable PQ serve's ground truth. */
+  private def exactL2Top(rows: Seq[(Long, Array[Float])], queryId: Long,
+      k: Int): Seq[Long] = {
+    val qv = quant(rows.find(_._1 == queryId).get._2)
+    rows.filter(_._1 != queryId).map { case (id, v) =>
+      val u = quant(v)
+      var d = 0L; var i = 0
+      while (i < u.length) { val x = u(i) - qv(i); d += x * x; i += 1 }
+      (id, d)
+    }.sortBy { case (id, d) => (d, id) }.take(k).map(_._1)
+  }
+
+  lazy val exactPortable: Seq[Long] = exactCosPpmTop(embRows(embs), 0L, 10)
 
   test("portable IVF serve: exact duplicate of the query ranks first at score 1e6") {
     import org.apache.spark.sql.functions.{col, lit}
@@ -294,19 +175,7 @@ class AnnSpec extends AnyFunSuite {
     assert(recall >= 5, s"portable IVF recall too low: $recall/10")
   }
 
-  /** Exact quantized-L2 ranking, the portable PQ serve's ground truth. */
-  lazy val exactPortableL2: Seq[Long] = {
-    val rows = embs.collect().map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    def quant(v: Array[Float]): Array[Long] =
-      v.map(x => math.floor(x.toDouble * 100).toLong)
-    val qv = quant(rows.find(_._1 == 0L).get._2)
-    rows.filter(_._1 != 0L).map { case (id, v) =>
-      val u = quant(v)
-      var d = 0L; var i = 0
-      while (i < u.length) { val x = u(i) - qv(i); d += x * x; i += 1 }
-      (id, d)
-    }.sortBy { case (id, d) => (d, id) }.take(10).map(_._1).toSeq
-  }
+  lazy val exactPortableL2: Seq[Long] = exactL2Top(embRows(embs), 0L, 10)
 
   test("portable PQ: recall vs the exact quantized-L2 ranking >= 0.7, distances exact") {
     val out = PortableAnn.pqTopKPortable(embs, queryId = 0L, topK = 10,
@@ -317,10 +186,7 @@ class AnnSpec extends AnyFunSuite {
       s"(got=${out.map(_._1).toSeq} exact=$exactPortableL2)")
     // the re-rank distances are EXACT integer L2 — check one against the
     // driver-side ground truth (value parity, not just ranking)
-    val rows = embs.collect()
-      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).toMap
-    def quant(v: Array[Float]): Array[Long] =
-      v.map(x => math.floor(x.toDouble * 100).toLong)
+    val rows = embRows(embs).toMap
     val qv = quant(rows(0L))
     val (hitId, hitDist) = out.head
     val u = quant(rows(hitId))
@@ -333,8 +199,7 @@ class AnnSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     val qz = PortableAnn.quantized(embs)
     // IVF serve with a trained model: narrow assignment + probe filter +
-    // TakeOrderedAndProject — zero corpus shuffles, same contract as the
-    // float ivfTopK plan test above
+    // TakeOrderedAndProject — zero corpus shuffles
     val cents = PortableAnn.ivfTrainInt(qz, nClusters = 8)
     val serve = PortableAnn.ivfTopKPortable(embs, queryId = 0L, k = 10,
       model = Some(cents))
@@ -761,7 +626,6 @@ class AnnSpec extends AnyFunSuite {
     // the logical vector set, catching composition bugs (the class the
     // upsert barrier exists for). Model frozen at the initial corpus
     // throughout — the maintenance contract.
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val dim = 8
     def md5Bucket(id: Long, mod: Int): Long = {
@@ -825,20 +689,20 @@ class AnnSpec extends AnyFunSuite {
 
   test("ensureBuilt: unchanged corpus reuses the index; a rewritten corpus rebuilds") {
     // stage a private copy of the corpus so mutating it is safe
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq_stale").toString
+    val dir = java.nio.file.Files.createTempDirectory("pivfpq_stale").toString
     val src = java.nio.file.Paths.get(s"$sf/embeddings.parquet")
     val dst = java.nio.file.Paths.get(s"$dir/embeddings.parquet")
     java.nio.file.Files.copy(src, dst)
     val embs = spark.read.parquet(dst.toString)
-    val p1 = graft.ann.IvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
-    val p2 = graft.ann.IvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
+    val p1 = graft.ann.PortableIvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
+    val p2 = graft.ann.PortableIvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
     assert(p1 == p2, "unchanged corpus must reuse the same index path")
     // a corpus rewrite (different mtime) must produce a NEW index path —
     // the staleness contract that makes the in-process model cache safe
     java.nio.file.Files.setLastModifiedTime(dst,
       java.nio.file.attribute.FileTime.fromMillis(
         java.nio.file.Files.getLastModifiedTime(dst).toMillis + 60000))
-    val p3 = graft.ann.IvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
+    val p3 = graft.ann.PortableIvfPqIndex.ensureBuilt(spark, embs, dir, dim = 64)
     assert(p3 != p1, "rewritten corpus must get a fresh index")
     // the rebuild reaps the orphaned index (no lookup can ever reach the
     // old stamp again — disk twin of Models.cachedLatest eviction)
@@ -847,23 +711,63 @@ class AnnSpec extends AnyFunSuite {
     assert(java.nio.file.Files.exists(java.nio.file.Paths.get(p3)))
   }
 
+  test("IVF centroids: nClusters entries of the right dimensionality") {
+    val cents = PortableAnn.ivfTrainInt(PortableAnn.quantized(embs),
+      nClusters = 8, iters = 2)
+    assert(cents.length == 8)
+    assert(cents.forall(_._2.length == 64))
+  }
+
+  test("IVF centroids: duplicate init vectors (empty clusters) still yield nClusters") {
+    import spark.implicits._
+    // vec 0..3 identical → distance ties starve all but one of those
+    // clusters; the starved clusters must keep their previous vector, not
+    // vanish
+    val dup = (0L until 16L).map { i =>
+      val v = if (i < 4) Array(1.0f, 0f, 0f) else
+        Array(math.cos(i.toDouble).toFloat, math.sin(i.toDouble).toFloat, 0.1f * i)
+      (i, v.toSeq)
+    }.toDF("vec_id", "embedding")
+    val cents = PortableAnn.ivfTrainInt(PortableAnn.quantized(dup),
+      nClusters = 6, iters = 3, sampleMod = 1)
+    assert(cents.length == 6, s"got ${cents.length} centroids")
+    assert(cents.forall(_._2.length == 3))
+  }
+
   test("PQ codebooks: m×k entries of subspace width, empty codes keep old centroids") {
-    val cbs = Pq.pqTrain(embs, dim = 64, m = 8, k = 16, iters = 2)
+    val cbs = PortableAnn.pqTrainInt(PortableAnn.quantized(embs), dim = 64,
+      m = 8, k = 16, iters = 2)
     assert(cbs.length == 8)
     assert(cbs.forall(_.length == 16))
     assert(cbs.forall(_.forall(_.length == 8)))
   }
 
+  /** HOF reference encoder for ONE subspace — the independently derived
+    * parity reference for the native `pq_encode`: exact integer squared L2
+    * to every code, first minimum wins (ties → smaller code). */
+  private def nearestCodeHof(sub: org.apache.spark.sql.Column,
+      codebook: Array[Array[Long]]): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions._
+    val dists = transform(typedlit(codebook.map(_.toSeq).toSeq), cvec =>
+      aggregate(zip_with(sub, cvec, (x, y) => (x - y) * (x - y)),
+        lit(0L), (acc, v) => acc + v))
+    (array_position(dists, array_min(dists)) - 1)
+      .cast(org.apache.spark.sql.types.IntegerType)
+  }
+
   test("native pq_encode is bit-identical to the HOF per-subspace argmin") {
     import org.apache.spark.sql.functions._
-    val cbs = Pq.pqTrain(embs, dim = 64, m = 8, k = 16, iters = 2)
-    val native = Pq.encode(embs, cbs, dim = 64)
+    val qz = PortableAnn.quantized(embs)
+    val cbs = PortableAnn.pqTrainInt(qz, dim = 64, m = 8, k = 16, iters = 2)
+    val native = qz
+      .select(col("vec_id"), PortableAnn.encodeIntCol(col("qv"), cbs).as("codes"))
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
-    val hof = embs.select(col("vec_id"),
+    val hof = qz.select(col("vec_id"),
         array((0 until 8).map(s =>
-          Pq.nearestCodeHof(slice(col("embedding"), s * 8 + 1, 8), cbs(s))): _*)
+          nearestCodeHof(slice(col("qv"), s * 8 + 1, 8), cbs(s))): _*)
           .as("codes"))
       .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getSeq[Int](1)))
+    assert(native.nonEmpty)
     assert(native.sameElements(hof))
   }
 
@@ -894,23 +798,18 @@ class AnnSpec extends AnyFunSuite {
       (i, if (i <= 40L) ring(0L) else ring(i))
     }
     val dup = rows.toDF("vec_id", "embedding")
-    val qv = rows.head._2.toArray
-    val exactDup = topIds(Knn.bruteForce(dup, qv, excludeId = 0L, k = 10))
-    assert(exactDup == (1L to 10L).toSet) // cosine ties resolve to lowest ids
-    val ivf = topIds(Knn.ivfTopK(dup, qv, excludeId = 0L, k = 10,
-      nClusters = 6, nProbe = 2, iters = 3))
-    assert(ivf == exactDup, s"IVF lost duplicates to a tie-broken cluster: $ivf")
-    val pq = topIds(Pq.pqTopK(dup, qv, excludeId = 0L, topK = 10,
-      dim = dim, m = 4, k = 16, iters = 2, sampleMod = 1))
-    assert(pq == exactDup, s"PQ lost duplicates: $pq")
-  }
-
-  test("PQ candidate scoring is a narrow map: zero shuffles, codes only") {
-    val cbs = Pq.pqTrain(embs, dim = 64, m = 8, k = 16, iters = 1)
-    val scored = Pq.adcScores(Pq.encode(embs, cbs, dim = 64), cbs, q, dim = 64)
-    val p = scored.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange hashpartitioning"),
-      s"ADC scoring must not shuffle the corpus:\n$p")
-    assert(!p.contains("Join"), s"ADC scoring must not join:\n$p")
+    val fixture = rows.map { case (id, v) => (id, v.toArray) }
+    val exactCos = exactCosPpmTop(fixture, 0L, 10)
+    val exactL2 = exactL2Top(fixture, 0L, 10)
+    // every copy scores 1e6 / sits at distance 0; ties resolve to lowest ids
+    assert(exactCos == (1L to 10L) && exactL2 == (1L to 10L))
+    val ivf = PortableAnn.ivfTopKPortable(dup, queryId = 0L, k = 10,
+      nClusters = 6, nProbe = 2, iters = 3, sampleMod = 1)
+      .collect().map(_.getLong(0)).toSeq
+    assert(ivf == exactCos, s"IVF lost duplicates to a tie-broken cluster: $ivf")
+    val pq = PortableAnn.pqTopKPortable(dup, queryId = 0L, topK = 10,
+      dim = dim, m = 4, k = 16, iters = 2, sampleMod = 1)
+      .collect().map(_.getLong(0)).toSeq
+    assert(pq == exactL2, s"PQ lost duplicates: $pq")
   }
 }

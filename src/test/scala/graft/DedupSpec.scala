@@ -103,14 +103,6 @@ class DedupSpec extends AnyFunSuite {
     assert(out.toSeq == Seq(("a b c", 1L, 3L), ("x y z", 3L, 1L)))
   }
 
-  test("minhash LSH finds an exact duplicate pair with jaccard 1.0") {
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val other = (100 to 140).map(i => s"tok$i").mkString(" ")
-    val d = docs((1L, base), (2L, base), (3L, other))
-    val pairs = Dedup.minHashPairs(d).as[(Long, Long, Long)].collect()
-    assert(pairs.toSeq == Seq((1L, 2L, 1000000L)))
-  }
-
   test("portable minhash LSH finds exact and near duplicates, drops unrelated") {
     val words = (1 to 60).map(i => s"tok$i")
     val a = words.mkString(" ")
@@ -124,27 +116,6 @@ class DedupSpec extends AnyFunSuite {
     assert(pairs.map(p => (p._1, p._2)) == Seq((1L, 2L), (1L, 3L), (2L, 3L)))
     assert(pairs.head._3 == 1000000L)
     assert(pairs.filter(p => p._2 == 3L).forall(_._3 == 1000000L * 55 / 61))
-  }
-
-  test("minhash LSH finds a near-duplicate (one token changed)") {
-    val words = (1 to 60).map(i => s"tok$i")
-    val a = words.mkString(" ")
-    val b = words.updated(30, "CHANGED").mkString(" ")
-    val d = docs((1L, a), (2L, b), (3L, (200 to 260).map(i => s"z$i").mkString(" ")))
-    val pairs = Dedup.minHashPairs(d, minJaccardX1e6 = 800000L)
-      .as[(Long, Long, Long)].collect()
-    assert(pairs.length == 1 && pairs(0)._1 == 1L && pairs(0)._2 == 2L)
-    // 58 shingles each, 55 common → J = 55/61 ≈ 0.9016
-    assert(pairs(0)._3 == (1000000L * 55 / 61))
-  }
-
-  test("simhash: identical docs collide at hamming 0; unrelated docs don't pair") {
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val other = (100 to 140).map(i => s"w$i").mkString(" ")
-    val d = docs((1L, base), (2L, base), (3L, other))
-    val pairs = Dedup.simHashPairs(d, maxHamming = 3)
-      .as[(Long, Long, Int)].collect()
-    assert(pairs.toSeq == Seq((1L, 2L, 0)))
   }
 
   test("portable simhash: identical docs at hamming 0, near-dup within gate, unrelated dropped") {
@@ -366,29 +337,7 @@ class DedupSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((1L, 2L, 1000000L / 3)))
   }
 
-  test("native minhash_sig is bit-identical to the explode+aggregate plan") {
-    import org.apache.spark.sql.functions._
-    val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-    val p = Dedup.MinHashParams()
-    val native = Dedup.minHashSignatures(docs, p)
-    // the composed reference plan: explode shingle hashes, 64 min-aggregates
-    val exploded = docs.select(col("doc_id"),
-      explode(graft.functions.TextFunctions
-        .wordShingleHashesRaw(col("text"), p.shingleLen)).as("h"))
-    val minCols = (0 until p.numPerms).map(i => min(xxhash64(col("h"), lit(i))).as(s"m$i"))
-    val composed = exploded.groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col("doc_id"),
-        array((0 until p.numPerms).map(i => col(s"m$i")): _*).as("sig"))
-    val joined = native.as("n").join(composed.as("c"), "doc_id")
-      .select(col("n.sig"), col("c.sig"))
-    assert(joined.count() == native.count() && native.count() > 0)
-    joined.collect().foreach { r =>
-      assert(r.getSeq[Long](0) == r.getSeq[Long](1))
-    }
-  }
-
-  test("native shingle_hashes is bit-identical to the HOF composition") {
+  test("native word_shingles and portable_shingle_hashes match their HOF compositions") {
     import org.apache.spark.sql.functions._
     val T = graft.functions.TextFunctions
     // fixture corpus plus the edge shapes: too-few tokens, exactly n tokens,
@@ -399,50 +348,17 @@ class DedupSpec extends AnyFunSuite {
       .select("text").union(edge)
     Seq(2, 3, 8).foreach { n =>
       val both = corpus.select(
-        T.wordShingleHashesRaw(col("text"), n).as("native"),
-        T.wordShingleHashesRawHof(col("text"), n).as("hof"),
         T.wordShingles(col("text"), n).as("native_s"),
         T.wordShinglesHof(col("text"), n).as("hof_s"),
         T.portableShingleHashes(col("text"), n).as("native_p"),
         T.portableShingleHashesHof(col("text"), n).as("hof_p"))
       both.collect().foreach { r =>
-        assert(r.getSeq[Long](0) == r.getSeq[Long](1),
-          s"n=$n hash mismatch: ${r.getSeq[Long](0)} vs ${r.getSeq[Long](1)}")
-        assert(r.getSeq[String](2) == r.getSeq[String](3),
-          s"n=$n shingle mismatch: ${r.getSeq[String](2)} vs ${r.getSeq[String](3)}")
-        assert(r.getSeq[Long](4) == r.getSeq[Long](5),
-          s"n=$n portable mismatch: ${r.getSeq[Long](4)} vs ${r.getSeq[Long](5)}")
+        assert(r.getSeq[String](0) == r.getSeq[String](1),
+          s"n=$n shingle mismatch: ${r.getSeq[String](0)} vs ${r.getSeq[String](1)}")
+        assert(r.getSeq[Long](2) == r.getSeq[Long](3),
+          s"n=$n portable mismatch: ${r.getSeq[Long](2)} vs ${r.getSeq[Long](3)}")
       }
     }
-  }
-
-  test("native simhash64 matches the HOF simHash reference") {
-    import org.apache.spark.sql.functions._
-    // deliberately-interpreted HOF reference path — see the
-    // portable_simhash60 twin above for the rationale
-    TestSpark.withCodegenFallback {
-      val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
-      val sh = graft.functions.TextFunctions.shingleHashes(col("text"), 3)
-      val both = Dedup.simHashes(docs).as("n")
-        .join(docs.select(col("doc_id"),
-          graft.functions.TextFunctions.simHash(sh).as("ref")).as("r"),
-          "doc_id")
-      both.collect().foreach { r =>
-        assert(r.getAs[Long]("simhash") == r.getAs[Long]("ref"))
-      }
-    }
-  }
-
-  test("embedding near-dups: identical vectors rank first with cosine 1") {
-    val v1 = Seq.tabulate(8)(i => i.toFloat + 1)
-    val v2 = v1
-    val v3 = Seq.tabulate(8)(i => (8 - i).toFloat)
-    val embs = Seq((1L, v1), (2L, v2), (3L, v3)).toDF("vec_id", "embedding")
-    val out = Dedup.embeddingNearDups(embs, dim = 8, k = 3)
-      .as[(Long, Long, Long)].collect()
-    assert(out.nonEmpty)
-    assert(out.head._1 == 1L && out.head._2 == 2L)
-    assert(out.head._3 >= 999999L) // cos(v,v) ~ 1.0 (floor may give 999999)
   }
 
   test("q188 duplication inflation replays from a driver-side distinct-text count") {

@@ -12,7 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class EvaluationSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val sf = "/root/testdata/sf0.001"
-  import scala.jdk.CollectionConverters._
 
   test("q279 randomized response: driver-side coin replay + debias bound") {
     def md560(s: String): Long = {
@@ -484,7 +483,6 @@ class EvaluationSpec extends AnyFunSuite {
   }
 
   test("q173 embedding audit: fixed-dim fixture, norm bounds ordered, counts conserve") {
-    import org.apache.spark.sql.functions._
     val rows = Evaluation.q173(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7)))

@@ -1,7 +1,6 @@
 package graft
 
 import graft.pipelines.MartPipelines
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end mart build on sf0.001 with the reference's own acceptance

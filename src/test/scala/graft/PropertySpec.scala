@@ -1029,12 +1029,9 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("the ANN trainers leave no persisted RDD and no scratch checkpoint behind") {
-    import graft.ann.{Knn, PortableAnn, Pq}
-    val embs = Tables.load(spark, smokeSf, "embeddings")
-    val qz = PortableAnn.quantized(embs)
+    import graft.ann.PortableAnn
+    val qz = PortableAnn.quantized(Tables.load(spark, smokeSf, "embeddings"))
     val trainers: Seq[(String, () => Any)] = Seq(
-      "Knn.ivfTrain" -> (() => Knn.ivfTrain(embs, nClusters = 8)),
-      "Pq.pqTrain" -> (() => Pq.pqTrain(embs, dim = 64, m = 8, k = 16)),
       "PortableAnn.ivfTrainInt" -> (() => PortableAnn.ivfTrainInt(qz, nClusters = 8)),
       "PortableAnn.pqTrainInt" ->
         (() => PortableAnn.pqTrainInt(qz, dim = 64, m = 8, k = 16)),
@@ -1045,7 +1042,7 @@ class PropertySpec extends AnyFunSuite {
       val (rdds, ids) = (sc.getPersistentRDDs.keySet,
         graft.operators.Checkpoints.liveIds)
       train()
-      assert((sc.getPersistentRDDs.keySet -- rdds).isEmpty, s"$name left a persisted RDD")
+      assert(sc.getPersistentRDDs.keySet.diff(rdds).isEmpty, s"$name left a persisted RDD")
       assert((graft.operators.Checkpoints.liveIds -- ids).isEmpty,
         s"$name left a scratch checkpoint")
     }

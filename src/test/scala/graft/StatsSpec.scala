@@ -754,7 +754,6 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("q276 bottom-k sets are mergeable: bottom-k of shard bottom-k's == corpus") {
-    import spark.implicits._
     // the property that makes the sketch a 100 TB citizen: each shard keeps
     // its own bottom-k; the union of shard samples re-bottom-k'd is the
     // corpus bottom-k, so merge order and shard count are invisible

@@ -419,7 +419,6 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-static enrichment and ingest gate match their batch twins") {
-    import spark.implicits._
     val base = java.nio.file.Files.createTempDirectory("ss_join").toString
     val events = EventStream.readEvents(spark, sf)
     val schema = Tables.load(spark, sf, "events").schema

@@ -95,19 +95,6 @@ class TextVectorSpec extends AnyFunSuite {
     assert(out.toSeq == Seq((1, "en"), (2, "de"), (3, "fr"), (4, "und")))
   }
 
-  test("simHash is stable and order-sensitive fingerprints differ") {
-    val df = Seq(
-      (1L, "a b c d e f g"),
-      (2L, "a b c d e f g"),
-      (3L, "g f e d c b a")).toDF("doc_id", "text")
-    val out = df.select(col("doc_id"),
-        T.simHash(T.shingleHashes(col("text"), 3)).as("sh"),
-        T.rollingFingerprint(T.shingleHashes(col("text"), 3)).as("fp"))
-      .orderBy("doc_id").as[(Long, Long, Long)].collect()
-    assert(out(0)._2 == out(1)._2 && out(0)._3 == out(1)._3) // deterministic
-    assert(out(0)._3 != out(2)._3) // different content → different fingerprint
-  }
-
   test("cosine: hand-computed values and null on zero norm") {
     val a = Seq(1f, 0f, 0f)
     val b = Seq(0f, 1f, 0f)
@@ -119,15 +106,6 @@ class TextVectorSpec extends AnyFunSuite {
     assert(math.abs(out(1).getDouble(0) - 1.0) < 1e-12)
     assert(math.abs(out(2).getDouble(0) - 1.0 / math.sqrt(2)) < 1e-12)
     assert(out(3).isNullAt(0))
-  }
-
-  test("hyperplane signature: deterministic, in range, equal for equal vectors") {
-    val v = Seq.tabulate(16)(i => (i * 0.1f) - 0.8f)
-    val df = Seq((1L, v), (2L, v)).toDF("id", "vec")
-    val out = df.select(V.hyperplaneSignature(col("vec"), 16, 8, 42L)).collect()
-    val sigs = out.map(_.getLong(0))
-    assert(sigs(0) == sigs(1))
-    assert(sigs(0) >= 0 && sigs(0) < 256)
   }
 
   test("native cosine_sim is bit-identical to the HOF reference path") {
@@ -144,16 +122,6 @@ class TextVectorSpec extends AnyFunSuite {
       // precision strictly left-to-right
       assert(r.getDouble(0) == r.getDouble(1))
     }
-  }
-
-  test("native hyperplane_sig is bit-identical to the HOF reference path") {
-    val rnd = new scala.util.Random(11)
-    val rows = Seq.fill(200)(Seq.fill(64)(rnd.nextFloat() * 2f - 1f))
-    val df = rows.toDF("vec")
-    val out = df.select(
-      V.hyperplaneSignature(col("vec"), 64, 8, 42L).as("native"),
-      V.hyperplaneSignatureHof(col("vec"), 64, 8, 42L).as("hof")).collect()
-    out.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
   test("native portable_hyperplane_sig matches the HOF algebra and a driver replay") {
@@ -215,6 +183,18 @@ class TextVectorSpec extends AnyFunSuite {
     val n = spark.sql(
       "SELECT cosine_sim(array(1.0f, 0.0f), array(1.0f, 0.0f)) AS c").head().getDouble(0)
     assert(n == 1.0)
+  }
+
+  test("the session registers exactly the eleven graft SQL functions") {
+    val registry = spark.sessionState.functionRegistry
+    val graftFns = registry.listFunction().map(_.funcName).filter { f =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(f))
+        .exists(_.getClassName.startsWith("graft.plans."))
+    }.toSet
+    assert(graftFns == Set("cosine_sim", "dot_i64", "winnow_select",
+      "intersect_count_i64", "portable_hyperplane_sig", "word_shingles",
+      "portable_shingle_hashes", "semdedup_closure", "portable_simhash60",
+      "pq_encode", "adc_dist"), graftFns.toSeq.sorted.mkString(", "))
   }
 
   test("q205 quality rules replay from a driver-side per-doc fold") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.SparkPlan
   * the first argument carries an ASC/DESC marker). These move all rows to
   * one partition, which is only acceptable on bounded frames; the
   * PlanQualitySpec whitelist is built from this probe's output.
-  * `runMain graft.tools.GlobalWindowProbe [sfDir]`. */
+  * `sbt "Test/runMain graft.tools.GlobalWindowProbe [sfDir]"`. */
 object GlobalWindowProbe {
 
   // no partition columns at all, OR a partition spec of bare integer
